@@ -3,13 +3,10 @@
 The reference copy-pastes the accused-status normalizer into every MV
 (``firs_mv.sql:44–52``, ``accuseds_mv.sql:30–38``,
 ``criminal_profiles_mv.sql:57–65``); here it is defined once as a reusable
-expression factory, plus a generic rule-cascade builder used by the
-priority-rollup classifiers (D9/D10).
+expression factory.
 """
 
 from __future__ import annotations
-
-from collections.abc import Sequence
 
 from pyspark.sql import Column
 from pyspark.sql import functions as F
@@ -64,27 +61,3 @@ def parse_accused_status(col: Column | str) -> list[Column]:
         c.contains("abscond").alias("is_absconding"),
         date_iso.alias("date_of_issue_41a"),
     ]
-
-
-def rule_cascade(col: Column | str, rules: Sequence[tuple[str, str]], default: str) -> Column:
-    """Generic ordered (lowercase LIKE pattern → label) cascade."""
-    c = F.lower(F.trim(F.col(col) if isinstance(col, str) else col))
-    expr = None
-    for pattern, label in rules:
-        cond = c.like(pattern)
-        expr = F.when(cond, F.lit(label)) if expr is None else expr.when(cond, F.lit(label))
-    if expr is None:
-        return F.lit(default)
-    return expr.otherwise(F.lit(default))
-
-
-def priority_rollup(label_col: Column | str, priority: Sequence[str]) -> Column:
-    """Map a label to its priority rank so ``min`` over a group picks the
-    highest-priority label (D9 rollup: cultivation>commercial>intermediate>small,
-    ``section-wise-case-clarification/process_sections.py:116–310``)."""
-    c = F.col(label_col) if isinstance(label_col, str) else label_col
-    expr = None
-    for rank, label in enumerate(priority):
-        cond = c == label
-        expr = F.when(cond, F.lit(rank)) if expr is None else expr.when(cond, F.lit(rank))
-    return expr.otherwise(F.lit(len(priority)))

@@ -14,6 +14,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from dopams_etl_spark.sinks import hadoop_fs_path, restore_retired, swap_staged
+
 GOLD_PIPELINES = (
     "firs_mv",
     "accuseds_mv",
@@ -40,27 +42,45 @@ def refresh_gold(
 ) -> dict[str, int]:
     """S13: recompute each gold pipeline and overwrite its parquet table
     (partitioned per ``GOLD_PARTITIONING``). Returns name → row count (the
-    reference's refresh logging analog). Duplicate names collapse (the
-    master dedups repeated refresh steps)."""
-    from dopams_etl_spark.plans import catalog
+    reference's refresh logging analog), in ``names`` order. Duplicate
+    names collapse (the master dedups repeated refresh steps).
 
+    The MVs refresh concurrently: each plan is built on the calling thread,
+    in order (the ``catalog.load_table`` and partition-probe memos stay
+    single-threaded), and its write runs on a pool thread while the next
+    plan builds. AQE coalesces an MV's late stages to a task or two, so one
+    MV at a time leaves most cores idle. The pool threads inherit the
+    caller's job group, description and tags. The call returns, or raises
+    the first failure in ``names`` order, only once every submitted write
+    has finished, so a retry never races a still-running write."""
+    from concurrent.futures import ThreadPoolExecutor
+
+    from pyspark import inheritable_thread_target
     from pyspark.sql import Observation
 
+    from dopams_etl_spark.plans import catalog
+
     qs = catalog.queries()
-    counts: dict[str, int] = {}
-    for name in dict.fromkeys(names):
-        # Row count comes from an Observation piggybacked on the write job —
-        # ONE pass per MV instead of write + re-read + count (the re-read
-        # was a second full scan per refresh).
-        obs = Observation(f"gold_refresh_{name}")
-        df = qs[name](spark, sf_dir).observe(obs, F.count(F.lit(1)).alias("rows"))
-        writer = df.write.mode("overwrite")
-        parts = GOLD_PARTITIONING.get(name)
-        if parts:
-            writer = writer.partitionBy(*parts)
-        writer.parquet(f"{out_dir}/{name}")
-        counts[name] = obs.get["rows"]
-    return counts
+    distinct = list(dict.fromkeys(names))
+    writes = {}
+    with ThreadPoolExecutor(max_workers=max(len(distinct), 1)) as pool:
+        for name in distinct:
+            # Row count comes from an Observation piggybacked on the write
+            # job — ONE pass per MV instead of write + re-read + count.
+            obs = Observation(f"gold_refresh_{name}")
+            df = qs[name](spark, sf_dir).observe(obs, F.count(F.lit(1)).alias("rows"))
+            writer = df.write.mode("overwrite")
+            parts = GOLD_PARTITIONING.get(name)
+            if parts:
+                writer = writer.partitionBy(*parts)
+            write = inheritable_thread_target(spark)(_write_observed)
+            writes[name] = pool.submit(write, writer, f"{out_dir}/{name}", obs)
+    return {name: fut.result() for name, fut in writes.items()}
+
+
+def _write_observed(writer, path: str, obs) -> int:
+    writer.parquet(path)
+    return obs.get["rows"]
 
 
 def load_gold(spark: SparkSession, out_dir: str, name: str) -> DataFrame:
@@ -112,32 +132,20 @@ def compact_table(
     measured bytes-per-row (no fixed repartition count to outgrow — the
     writer splits per file, and ``partition_cols`` are preserved so
     pruning still works). Staged rewrite (write to ``<path>.compact``,
-    then swap) so a failed compaction never corrupts the table — the
-    parquet analog of the reference's transactional refresh.
+    then ``sinks.swap_staged``) through the Hadoop FS API, so a failed or
+    killed compaction never loses the table, on local disk, HDFS or S3
+    alike — the parquet analog of the reference's transactional refresh.
 
     Returns {"files_before", "files_after", "rows"}.
     """
-    import glob
-    import os
-    import shutil
-
-    def file_count(p: str) -> int:
-        return sum(
-            1
-            for f in glob.glob(os.path.join(p, "**", "*.parquet"), recursive=True)
-            if os.path.isfile(f)
-        )
-
+    path = path.rstrip("/")
+    restore_retired(spark, path)
     df = spark.read.parquet(path)
     rows = df.count()
-    before = file_count(path)
-    size_bytes = sum(
-        os.path.getsize(f)
-        for f in glob.glob(os.path.join(path, "**", "*.parquet"), recursive=True)
-    )
+    before, size_bytes = _parquet_files(spark, path)
     per_row = max(size_bytes / max(rows, 1), 1.0)
     max_records = max(int(target_file_bytes / per_row), 1)
-    staged = path.rstrip("/") + ".compact"
+    staged = path + ".compact"
     writer = (
         df.coalesce(max(1, min(32, int(size_bytes / target_file_bytes) + 1)))
         .write.mode("overwrite")
@@ -146,6 +154,18 @@ def compact_table(
     if partition_cols:
         writer = writer.partitionBy(*partition_cols)
     writer.parquet(staged)
-    shutil.rmtree(path)
-    os.rename(staged, path)
-    return {"files_before": before, "files_after": file_count(path), "rows": rows}
+    swap_staged(spark, staged, path)
+    return {"files_before": before, "files_after": _parquet_files(spark, path)[0], "rows": rows}
+
+
+def _parquet_files(spark: SparkSession, path: str) -> tuple[int, int]:
+    """(count, total bytes) of the parquet files under ``path``."""
+    fs, hpath = hadoop_fs_path(spark, path)
+    files = fs.listFiles(hpath, True)
+    count = size = 0
+    while files.hasNext():
+        st = files.next()
+        if st.getPath().getName().endswith(".parquet"):
+            count += 1
+            size += st.getLen()
+    return count, size

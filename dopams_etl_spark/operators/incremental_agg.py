@@ -42,22 +42,6 @@ from pyspark.sql import functions as F
 _MERGEABLE = ("sum", "count", "min", "max", "avg", "approx_distinct")
 
 
-def _state_cols(measures: Mapping[str, tuple[str, str | None]]) -> list[str]:
-    cols: list[str] = []
-    for out, (kind, _src) in measures.items():
-        if kind in ("sum", "avg"):
-            cols.append(f"{out}__sum")
-        if kind in ("count", "avg"):
-            cols.append(f"{out}__cnt")
-        if kind == "min":
-            cols.append(f"{out}__min")
-        if kind == "max":
-            cols.append(f"{out}__max")
-        if kind == "approx_distinct":
-            cols.append(f"{out}__hll")
-    return cols
-
-
 def agg_state(
     df: DataFrame,
     keys: Sequence[str],

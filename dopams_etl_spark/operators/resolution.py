@@ -93,17 +93,6 @@ def phonetic_overlap(a: Column, b: Column) -> Column:
     )
 
 
-def address_similarity(a: Column, b: Column) -> Column:
-    """Token Jaccard over [a-z0-9]+ tokens (``main.py:229–234``)."""
-    ta = F.array_distinct(F.regexp_extract_all(F.lower(F.coalesce(a, F.lit(""))), F.lit(r"[a-z0-9]+"), 0))
-    tb = F.array_distinct(F.regexp_extract_all(F.lower(F.coalesce(b, F.lit(""))), F.lit(r"[a-z0-9]+"), 0))
-    inter = F.size(F.array_intersect(ta, tb))
-    union = F.size(F.array_union(ta, tb))
-    return F.when((F.size(ta) == 0) | (F.size(tb) == 0), F.lit(0.0)).otherwise(
-        inter / union.cast("double")
-    )
-
-
 def age_score(a: Column, b: Column) -> Column:
     """0.5 unknown; 0.8 within 2 years; linear decay to 0.0 at 10
     (``main.py:237–248``)."""
@@ -115,13 +104,6 @@ def age_score(a: Column, b: Column) -> Column:
         .when(diff >= 10, F.lit(0.0))
         .otherwise(F.greatest(F.lit(0.0), 0.8 - (diff - 2) * (0.8 / 8.0)))
     )
-
-
-def alias_score(a: Column, b: Column) -> Column:
-    return F.when(
-        a.isNull() | b.isNull() | (normalize_name(a) == "") | (normalize_name(b) == ""),
-        F.lit(0.0),
-    ).otherwise((normalize_name(a) == normalize_name(b)).cast("double"))
 
 
 def score_pairs(

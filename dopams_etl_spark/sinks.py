@@ -32,6 +32,55 @@ def delta_available() -> bool:
         return False
 
 
+# -- staged directory swap (Hadoop FS API: local disk, HDFS, s3a alike) ----
+
+
+def hadoop_fs_path(spark: SparkSession, p: str):
+    """(FileSystem, Path) for ``p`` under the session's Hadoop conf."""
+    hpath = spark._jvm.org.apache.hadoop.fs.Path(p)
+    return hpath.getFileSystem(spark._jsc.hadoopConfiguration()), hpath
+
+
+def _retired(path: str) -> str:
+    return f"{path}__retired"
+
+
+def restore_retired(spark: SparkSession, path: str) -> None:
+    """Finish recovering from a swap cut between its retire and publish
+    steps (a killed process): the live dir is missing and its retired copy
+    holds the last good table, so move the copy back."""
+    fs, live = hadoop_fs_path(spark, path)
+    _, retired = hadoop_fs_path(spark, _retired(path))
+    if fs.exists(live) or not fs.exists(retired):
+        return
+    if not fs.rename(retired, live):
+        raise OSError(f"could not restore {path} from its retired copy")
+
+
+def swap_staged(spark: SparkSession, staged: str, path: str) -> None:
+    """Replace the directory ``path`` with the fully written ``staged``:
+    retire the live dir, publish the staged one (rolling the retired copy
+    back if the publish fails), then delete the retired copy. Each step is
+    one rename, so at every point either ``path`` or its retired copy holds
+    a complete table (``restore_retired`` takes over after a crash between
+    the two renames); the pair is not atomic — Delta is the answer where
+    that window matters."""
+    fs, live = hadoop_fs_path(spark, path)
+    _, stage = hadoop_fs_path(spark, staged)
+    _, retired = hadoop_fs_path(spark, _retired(path))
+    if fs.exists(retired):
+        fs.delete(retired, True)
+    if not fs.rename(live, retired):
+        raise OSError(f"could not retire {path}")
+    try:
+        if not fs.rename(stage, live):
+            raise OSError(f"could not publish {staged}")
+    except BaseException:
+        fs.rename(retired, live)  # roll back
+        raise
+    fs.delete(retired, True)
+
+
 class KeyedTableSink:
     """Upsert sink over a keyed table at ``path``.
 
@@ -64,16 +113,8 @@ class KeyedTableSink:
             fmt if fmt != "auto" else "parquet"
         )
 
-    # -- filesystem helpers (Hadoop FS API — works for local, HDFS, s3a) --
-
-    def _fs_and_path(self, p: str):
-        jvm = self.spark._jvm
-        hpath = jvm.org.apache.hadoop.fs.Path(p)
-        fs = hpath.getFileSystem(self.spark._jsc.hadoopConfiguration())
-        return fs, hpath
-
     def exists(self) -> bool:
-        fs, hpath = self._fs_and_path(self.path)
+        fs, hpath = hadoop_fs_path(self.spark, self.path)
         return bool(fs.exists(hpath))
 
     def read(self) -> DataFrame:
@@ -88,6 +129,7 @@ class KeyedTableSink:
         first write). Equal-version re-sends replace in place, matching the
         reference's in-chunk duplicate handling (``etl_crimes.py:853–871``).
         """
+        restore_retired(self.spark, self.path)
         if not self.exists():
             self._initial_write(incoming)
             return
@@ -125,23 +167,11 @@ class KeyedTableSink:
         )
 
     def _parquet_merge(self, incoming: DataFrame) -> None:
-        """Fallback: merge into a staging dir, then swap directories via
-        the Hadoop FileSystem API. The staged result is fully written
-        before the live path is touched, so readers never see a partial
-        table; the swap itself is two renames (not atomic across them —
-        Delta is the answer where that window matters)."""
+        """Fallback: merge into a staging dir, then ``swap_staged`` it in.
+        The staged result is fully written before the live path is touched,
+        so readers never see a partial table (the merge reads the files the
+        write replaces, so it cannot overwrite in place)."""
         merged = upsert_latest_wins(self.read(), incoming, self.keys, self.version_col)
         staging = f"{self.path}__staging"
-        retired = f"{self.path}__retired"
         merged.write.mode("overwrite").parquet(staging)
-        fs, live = self._fs_and_path(self.path)
-        _, stage_p = self._fs_and_path(staging)
-        _, retired_p = self._fs_and_path(retired)
-        if fs.exists(retired_p):
-            fs.delete(retired_p, True)
-        if not fs.rename(live, retired_p):
-            raise OSError(f"could not retire {self.path}")
-        if not fs.rename(stage_p, live):
-            fs.rename(retired_p, live)  # roll back
-            raise OSError(f"could not publish {staging}")
-        fs.delete(retired_p, True)
+        swap_staged(self.spark, staging, self.path)

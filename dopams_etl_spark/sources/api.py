@@ -57,23 +57,26 @@ def fetch_chunked(
     sleeper: Callable[[float], None] = time.sleep,
 ) -> DataFrame:
     """S1: pull every (from, to) chunk through the fetcher with retries and
-    union the results. Empty feeds yield an empty, correctly-typed frame."""
-    frames: list[DataFrame] = []
+    build ONE frame from all chunks' records, in chunk order (overlap
+    re-sends included). One ``createDataFrame`` gives one scan leaf, where
+    a frame per chunk would union N scans whose partitions each cost a
+    task downstream. Empty feeds yield an empty, correctly-typed frame."""
+    records: list[dict] = []
     for start, end in chunks:
-        records: list[dict] = []
+        chunk: list[dict] = []
         for attempt in range(policy.max_retries + 1):
             try:
-                records = fetcher(start, end)
+                chunk = fetcher(start, end)
                 break
             except Exception:
                 if attempt >= policy.max_retries:
                     raise
                 sleeper(policy.delay(attempt))
-        frames.append(spark.createDataFrame(records, schema))
-    out = spark.createDataFrame([], schema)
-    for f in frames:
-        out = out.unionByName(f)
-    return out
+        records.extend(chunk)
+    # A list, not a pyarrow.Table: the Arrow route scans faster but turns
+    # TimestampNTZ into session-zone timestamps and reads naive datetimes
+    # as UTC, so its rows differ from the fetcher's.
+    return spark.createDataFrame(records, schema)
 
 
 def point_lookup_enrich(

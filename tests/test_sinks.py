@@ -75,3 +75,92 @@ def test_matches_upsert_latest_wins_oracle_semantics(spark, tmp_path):
     }
     got = {tuple(r) for r in s.read().select("id", "version", "val").collect()}
     assert got == expect
+
+
+class _FailingPublish:
+    """Hadoop FileSystem proxy whose publish rename (staged dir → live
+    path) raises: the fault sits after the live table was retired."""
+
+    def __init__(self, fs, staged_suffix):
+        self._fs, self._suffix = fs, staged_suffix
+
+    def rename(self, src, dst):
+        if src.getName().endswith(self._suffix):
+            raise OSError("injected fault between retire and publish")
+        return self._fs.rename(src, dst)
+
+    def __getattr__(self, name):
+        return getattr(self._fs, name)
+
+
+def _fail_publish(monkeypatch, staged_suffix):
+    import dopams_etl_spark.sinks as sinks
+
+    real = sinks.hadoop_fs_path
+
+    def patched(spark, p):
+        fs, hpath = real(spark, p)
+        return _FailingPublish(fs, staged_suffix), hpath
+
+    monkeypatch.setattr(sinks, "hadoop_fs_path", patched)
+
+
+def _frag_table(spark, path):
+    rows = [(i, i % 3, f"v{i}") for i in range(60)]
+    df = spark.createDataFrame(rows, "id long, yr long, val string")
+    df.repartition(6).write.partitionBy("yr").mode("overwrite").parquet(path)
+    return sorted(rows)
+
+
+def _rows(spark, path):
+    return sorted(tuple(r) for r in spark.read.parquet(path).select("id", "yr", "val").collect())
+
+
+def test_compact_table_publish_fault_keeps_table(spark, tmp_path, monkeypatch):
+    """Compaction fails between retiring the live table and publishing the
+    staged one: the retired copy is rolled back, the table still reads in
+    full, and nothing is left retired."""
+    from dopams_etl_spark.gold import compact_table
+
+    path = str(tmp_path / "frag")
+    want = _frag_table(spark, path)
+    _fail_publish(monkeypatch, ".compact")
+    with pytest.raises(OSError, match="injected fault"):
+        compact_table(spark, path, partition_cols=("yr",))
+    assert _rows(spark, path) == want
+    assert not (tmp_path / "frag__retired").exists()
+    monkeypatch.undo()
+    stats = compact_table(spark, path, partition_cols=("yr",))
+    assert stats["rows"] == 60 and stats["files_after"] < stats["files_before"]
+    assert _rows(spark, path) == want
+
+
+def test_compact_table_recovers_a_crash_after_retire(spark, tmp_path):
+    """A process killed right after the retire rename leaves only the
+    retired copy; the next compaction restores it and proceeds."""
+    from dopams_etl_spark.gold import compact_table
+
+    path = str(tmp_path / "frag")
+    want = _frag_table(spark, path)
+    (tmp_path / "frag").rename(tmp_path / "frag__retired")  # the crash point
+    stats = compact_table(spark, path, partition_cols=("yr",))
+    assert stats["rows"] == 60
+    assert _rows(spark, path) == want
+    assert not (tmp_path / "frag__retired").exists()
+
+
+def test_upsert_publish_fault_keeps_table(spark, tmp_path, monkeypatch):
+    """The sink's swap shares the helper: a failed publish leaves the
+    previous table readable, and after a crash past the retire step the
+    next upsert merges into the restored table rather than starting over."""
+    s = _sink(spark, tmp_path)
+    s.upsert(_batch(spark, [(1, 1, "a"), (2, 1, "b")]))
+    _fail_publish(monkeypatch, "__staging")
+    with pytest.raises(OSError, match="injected fault"):
+        s.upsert(_batch(spark, [(1, 2, "a2")]))
+    monkeypatch.undo()
+    assert {(r["id"], r["val"]) for r in s.read().collect()} == {(1, "a"), (2, "b")}
+    (tmp_path / "tbl").rename(tmp_path / "tbl__retired")  # the crash point
+    s.upsert(_batch(spark, [(3, 1, "c")]))
+    got = {(r["id"], r["val"]) for r in s.read().collect()}
+    assert got == {(1, "a"), (2, "b"), (3, "c")}

@@ -1,10 +1,21 @@
 """Sources (S1-S5, S12), gold refresh (S13), orchestration (I7), D4."""
 
 import datetime
+import os
+import warnings
+from decimal import Decimal
 
 import pytest
 from pyspark.sql import functions as F
-from pyspark.sql.types import LongType, StringType, StructField, StructType
+from pyspark.sql.types import (
+    DecimalType,
+    LongType,
+    StringType,
+    StructField,
+    StructType,
+    TimestampNTZType,
+    TimestampType,
+)
 
 from dopams_etl_spark.pipeline import Stage, normalize_stages, run_pipeline
 from dopams_etl_spark.sources import (
@@ -18,6 +29,7 @@ from dopams_etl_spark.sources import (
 )
 
 SCHEMA = StructType([StructField("id", LongType()), StructField("v", StringType())])
+SF = "/root/testdata/sf0.001"
 
 
 def test_fetch_chunked_with_retries(spark):
@@ -37,6 +49,60 @@ def test_fetch_chunked_with_retries(spark):
     out = fetch_chunked(spark, flaky, chunks, SCHEMA, RetryPolicy(2, 1.0), slept.append)
     assert out.count() == 2
     assert slept == [1.0]  # 2**0 backoff after the single failure
+
+
+TYPED = StructType([
+    StructField("id", LongType()),
+    StructField("ts", TimestampType()),
+    StructField("ntz", TimestampNTZType()),
+    StructField("amt", DecimalType(12, 2)),
+    StructField("v", StringType()),
+])
+
+
+def _typed_chunks():
+    """Three chunk responses; the middle one re-sends chunk 1's last row
+    (the 1-day overlap), and NULLs sit in every nullable column."""
+    def rec(i, day, amt, v):
+        at = datetime.datetime(2024, 1, day, 10, 30, 15, 123456)
+        return {"id": i, "ts": at, "ntz": at, "amt": amt, "v": v}
+
+    return [
+        [rec(1, 1, Decimal("10.50"), "a"), rec(2, 5, Decimal("-0.01"), None)],
+        [rec(2, 5, Decimal("-0.01"), None), rec(3, 6, None, "c"),
+         {"id": 4, "ts": None, "ntz": None, "amt": Decimal("9999999999.99"), "v": "d"}],
+        [rec(5, 10, Decimal("0.00"), "e")],
+    ]
+
+
+def _feed(spark, responses):
+    chunks = [(datetime.datetime(2024, 1, 1 + 5 * i), datetime.datetime(2024, 1, 6 + 5 * i))
+              for i in range(len(responses))]
+    by_start = {c[0]: r for c, r in zip(chunks, responses)}
+    return fetch_chunked(spark, lambda start, end: by_start[start], chunks, TYPED)
+
+
+def test_fetch_chunked_builds_one_relation(spark):
+    """Every chunk's records land in ONE scan: no Union of per-chunk scans
+    (each of whose partitions cost a task downstream), the rows are the
+    concatenated chunk records (overlap re-sends kept), and values match a
+    single createDataFrame for timestamp, timestamp_ntz, decimal and NULL."""
+    responses = _typed_chunks()
+    records = [r for chunk in responses for r in chunk]
+    out = _feed(spark, responses)
+    plan = out._jdf.queryExecution().executedPlan()
+    assert plan.collectLeaves().size() == 1
+    assert "Union" not in plan.toString()
+    assert out.schema == TYPED
+    got = out.collect()
+    assert [r.asDict() for r in got] == records
+    assert got == spark.createDataFrame(records, TYPED).collect()
+
+
+def test_fetch_chunked_all_empty(spark):
+    out = _feed(spark, [[], [], []])
+    assert out.schema == TYPED
+    assert out.collect() == []
 
 
 def test_retry_matrix():
@@ -98,6 +164,128 @@ def test_gold_refresh_and_udtfs(spark, tmp_path):
     assert hist.count() > 0
     found = search_person_by_name(spark, out, "widget")
     assert found.count() > 0
+
+
+def _drained_store(spark):
+    sc = spark.sparkContext._jsc.sc()
+    sc.listenerBus().waitUntilEmpty()
+    return sc.statusStore()
+
+
+def _job_ids(store) -> set[int]:
+    jobs = store.jobsList(None)
+    return {jobs.apply(i).jobId() for i in range(jobs.size())}
+
+
+def _executions(sql) -> list:
+    execs = sql.executionsList()
+    return [execs.apply(i) for i in range(execs.size())]
+
+
+def _scala_keys(m) -> set[int]:
+    it, out = m.keysIterator(), set()
+    while it.hasNext():
+        out.add(it.next())
+    return out
+
+
+def test_gold_refresh_keeps_job_group_across_threads(spark, tmp_path):
+    """The MV writes run on pool threads, yet every job the refresh starts
+    carries the caller's job group and tags, and each MV's write shows up
+    as its own SQL execution with at least one job."""
+    names = ("firs_mv", "accuseds_mv", "criminal_profiles_mv",
+             "advanced_search_firs", "advanced_search_accuseds")
+    out = str(tmp_path / "gold")
+    sql = spark._jsparkSession.sharedState().statusStore()
+    store = _drained_store(spark)
+    # ids, not counts: the status stores keep only the latest ~1000 entries
+    jobs_before = _job_ids(store)
+    execs_before = {e.executionId() for e in _executions(sql)}
+    sc = spark.sparkContext
+    sc.setJobGroup("gold-refresh-test", "refresh under one group")
+    spark.addTag("gold-refresh-tag")
+    try:
+        with warnings.catch_warnings(record=True) as caught:
+            warnings.simplefilter("always")
+            from dopams_etl_spark.gold import refresh_gold
+
+            counts = refresh_gold(spark, SF, out, names)
+    finally:
+        spark.removeTag("gold-refresh-tag")
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    assert list(counts) == list(names)
+    assert not [w for w in caught if "Tags will not be inherited" in str(w.message)]
+    store = _drained_store(spark)
+    new_jobs = _job_ids(store) - jobs_before
+    assert new_jobs
+    for job_id in new_jobs:
+        job = store.job(job_id)
+        assert job.jobGroup().isDefined() and job.jobGroup().get() == "gold-refresh-test", job_id
+    per_mv = {n: set() for n in names}
+    for e in _executions(sql):
+        if e.executionId() in execs_before:
+            continue
+        for n in names:
+            if f"{out}/{n}" in e.physicalPlanDescription():
+                per_mv[n] |= _scala_keys(e.jobs())
+    assert all(per_mv.values()), per_mv
+    writes = set().union(*per_mv.values())
+    assert writes <= new_jobs
+    # session tags reach only SQL-execution jobs (not, e.g., a schema
+    # inference job), as "spark-session-<id>-thread-<id>-<tag>"
+    for job_id in writes:
+        tags = store.job(job_id).jobTags().mkString("\n").split("\n")
+        assert any(t.endswith("-gold-refresh-tag") for t in tags), (job_id, tags)
+
+
+def _registry_with(monkeypatch, extra):
+    from dopams_etl_spark.plans import catalog
+
+    real = catalog.queries
+    monkeypatch.setattr(catalog, "queries", lambda: {**real(), **extra})
+
+
+def _no_active_jobs(spark):
+    _drained_store(spark)
+    return list(spark.sparkContext.statusTracker().getActiveJobsIds()) == []
+
+
+def _written(path) -> bool:
+    return os.path.exists(os.path.join(path, "_SUCCESS"))
+
+
+def test_gold_refresh_execution_failure_waits_for_other_writes(spark, tmp_path, monkeypatch):
+    """A write that fails at execution is raised, but only after every
+    other submitted write has finished, so a retry never overlaps a
+    still-running write; the other MVs read back complete."""
+    from dopams_etl_spark.gold import refresh_gold
+
+    def boom(spark, sf_dir):
+        x = F.when(F.col("id") > 5, F.raise_error(F.lit("boom at execution")))
+        return spark.range(10).select(x.otherwise(F.col("id")).alias("x"))
+
+    _registry_with(monkeypatch, {"boom_mv": boom})
+    out = str(tmp_path / "gold")
+    with pytest.raises(Exception, match="boom at execution"):
+        refresh_gold(spark, SF, out, ("boom_mv", "firs_mv", "accuseds_mv"))
+    assert _written(f"{out}/firs_mv") and _written(f"{out}/accuseds_mv")
+    assert _no_active_jobs(spark)
+    assert spark.read.parquet(f"{out}/firs_mv").count() == 1500
+    assert spark.read.parquet(f"{out}/accuseds_mv").count() == 6000
+
+
+def test_gold_refresh_build_failure_leaves_no_running_write(spark, tmp_path):
+    """An unknown name fails at build time, after earlier MVs' writes were
+    submitted: the call raises once those writes are done."""
+    from dopams_etl_spark.gold import refresh_gold
+
+    out = str(tmp_path / "gold")
+    with pytest.raises(KeyError, match="no_such_mv"):
+        refresh_gold(spark, SF, out, ("firs_mv", "no_such_mv"))
+    assert _written(f"{out}/firs_mv")
+    assert _no_active_jobs(spark)
+    assert spark.read.parquet(f"{out}/firs_mv").count() == 1500
 
 
 def test_pipeline_retry_and_refresh_dedup():
