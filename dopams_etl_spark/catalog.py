@@ -49,12 +49,28 @@ BROADCAST_TABLES = frozenset({"region", "nation"})
 # metastore's cached table definition. Keyed WEAKLY by the SparkSession
 # object itself: a ``newSession()`` (same applicationId, different conf)
 # gets its own entries, and a collected session's plans evict with it.
-# The cached plan snapshots the file listing at first read — correct for
-# the fixed read-only testdata this catalog fronts; callers loading a
-# directory they mutate must pass ``cache=False``.
+# The cached plan snapshots the file listing at first read, so whatever
+# replaces a table's files must drop its entries: the library's writers
+# (``KeyedTableSink.upsert``, ``gold.compact_table``) call
+# ``forget_path``; other writers call it too, or readers pass
+# ``cache=False``.
 _TABLE_CACHE: "weakref.WeakKeyDictionary[SparkSession, dict[tuple[str, str], DataFrame]]" = (
     weakref.WeakKeyDictionary()
 )
+
+
+def _norm_path(path: str) -> str:
+    return path.rstrip("/") if "://" in path else os.path.abspath(path)
+
+
+def forget_path(path: str) -> None:
+    """Drop every session's memoized ``load_table`` read of ``path``; call
+    after replacing the files under it."""
+    target = _norm_path(path)
+    for per_session in list(_TABLE_CACHE.values()):
+        for sf_dir, name in list(per_session):
+            if _norm_path(f"{sf_dir}/{name}.parquet") == target:
+                per_session.pop((sf_dir, name), None)
 
 
 def load_table(
@@ -64,8 +80,9 @@ def load_table(
     cache: bool = True,
 ) -> DataFrame:
     """Read one catalog table (memoized per session — see _TABLE_CACHE;
-    pass ``cache=False`` when reading a directory whose files change,
-    since the cached plan pins its first file listing).
+    the cached plan pins its first file listing, so a writer replacing
+    the table's files calls ``forget_path``, or the reader passes
+    ``cache=False``).
 
     No ``mergeSchema`` — the testdata schemas are fixed, and footer merging
     costs a full file listing + footer read per query. Schema evolution is

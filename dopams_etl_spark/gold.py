@@ -14,6 +14,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from dopams_etl_spark.catalog import forget_path
 from dopams_etl_spark.sinks import hadoop_fs_path, restore_retired, swap_staged
 
 GOLD_PIPELINES = (
@@ -90,11 +91,13 @@ def load_gold(spark: SparkSession, out_dir: str, name: str) -> DataFrame:
 def get_accused_crime_history(spark: SparkSession, out_dir: str, person_id: int) -> DataFrame:
     """UDTF analog of ``get_accused_crime_history(id)``
     (``DB-schema.sql:377–420``): every crime row for one person, latest
-    first."""
-    return (
-        load_gold(spark, out_dir, "accuseds_mv")
-        .filter(F.col("accused_id").endswith(f":{person_id}"))
-        .orderBy(F.col("fir_date").desc(), F.col("crime_id").asc())
+    first (undated rows last), in one partition."""
+    return _sorted_lookup(
+        load_gold(spark, out_dir, "accuseds_mv").filter(
+            F.col("accused_id").endswith(f":{person_id}")
+        ),
+        F.col("fir_date").desc(),
+        F.col("crime_id").asc(),
     )
 
 
@@ -110,12 +113,23 @@ def get_person_crime_history(spark: SparkSession, out_dir: str, person_id: int) 
 def search_person_by_name(spark: SparkSession, out_dir: str, name: str) -> DataFrame:
     """UDTF analog of ``search_person_by_name(name)``
     (``DB-schema.sql:461–503``): case-insensitive containment, ordered by
-    crime count descending."""
-    return (
-        load_gold(spark, out_dir, "criminal_profiles_mv")
-        .filter(F.lower(F.col("person_name")).contains(name.lower()))
-        .orderBy(F.col("crime_count").desc(), F.col("person_id").asc())
+    crime count descending, in one partition."""
+    return _sorted_lookup(
+        load_gold(spark, out_dir, "criminal_profiles_mv").filter(
+            F.lower(F.col("person_name")).contains(name.lower())
+        ),
+        F.col("crime_count").desc(),
+        F.col("person_id").asc(),
     )
+
+
+def _sorted_lookup(matches: DataFrame, *keys) -> DataFrame:
+    """Total order over a lookup's few matching rows in one partition. An
+    ``orderBy`` would range-partition them, and sampling the range bounds
+    costs a second job that scans and filters the gold table again; here
+    the scan and filter stay parallel and only the matches are shuffled,
+    into the single partition the caller collects anyway."""
+    return matches.repartition(1).sortWithinPartitions(*keys)
 
 
 def compact_table(
@@ -135,6 +149,7 @@ def compact_table(
     then ``sinks.swap_staged``) through the Hadoop FS API, so a failed or
     killed compaction never loses the table, on local disk, HDFS or S3
     alike — the parquet analog of the reference's transactional refresh.
+    The ``catalog.load_table`` memo of ``path`` is dropped after the swap.
 
     Returns {"files_before", "files_after", "rows"}.
     """
@@ -155,6 +170,7 @@ def compact_table(
         writer = writer.partitionBy(*partition_cols)
     writer.parquet(staged)
     swap_staged(spark, staged, path)
+    forget_path(path)
     return {"files_before": before, "files_after": _parquet_files(spark, path)[0], "rows": rows}
 
 

@@ -5,11 +5,13 @@ Reference: the LangGraph generate → validate → execute → retry loop in
 ``chatbot/agents/nodes.py:87–800``. Spark-first restatement: generation is
 a pluggable callable ``(spark, plan, question) -> sql`` — an LLM provider
 plugs in unchanged — and the default ``generate_sql`` builds the SQL
-deterministically from the QueryPlan plus the LIVE catalog schema
-(``spark.catalog.listColumns``, never a hardcoded table list), so the
-whole orchestration loop round-trips hermetically in tests. Generated SQL
-still goes through the N4 validator and the N5 guarded executor — the
-generator is NOT trusted, exactly as the reference treats its LLM.
+deterministically from the QueryPlan plus the LIVE catalog schema (the
+planner's ``_columns``: the table's analyzed schema, which unlike
+``spark.catalog.listColumns`` starts no Spark job; never a hardcoded
+table list), so the whole orchestration loop round-trips hermetically in
+tests. Generated SQL still goes through the N4 validator and the N5
+guarded executor — the generator is NOT trusted, exactly as the
+reference treats its LLM.
 """
 
 from __future__ import annotations
@@ -20,7 +22,7 @@ from dataclasses import dataclass, field
 from pyspark.sql import SparkSession
 
 from dopams_etl_spark.nlq.executor import ExecutionResult, execute_guarded
-from dopams_etl_spark.nlq.planner import QueryPlan, plan_query
+from dopams_etl_spark.nlq.planner import QueryPlan, _columns, plan_query
 from dopams_etl_spark.nlq.validator import validate_sql
 
 Generator = Callable[[SparkSession, QueryPlan, str], str]
@@ -33,7 +35,7 @@ def _quote_literal(term: str) -> str:
 
 
 def _string_columns(spark: SparkSession, table: str) -> list[str]:
-    return [c.name for c in spark.catalog.listColumns(table) if c.dataType == "string"]
+    return [name for name, dtype in _columns(spark, table) if dtype == "string"]
 
 
 def _where_clause(spark: SparkSession, table: str, plan: QueryPlan) -> str:

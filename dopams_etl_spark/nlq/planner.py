@@ -1,10 +1,16 @@
 """NL query planner shell (N1–N3, W5).
 
 Keyword-scored intent detection, table matching against the LIVE Spark
-catalog (``spark.catalog.listTables/listColumns`` — never a hardcoded
-schema), and feature extraction (search terms, aggregation/join needs,
-LIMIT with default 100 / cap 10000). Parity with
+catalog (``_table_names`` / ``_columns`` — never a hardcoded schema), and
+feature extraction (search terms, aggregation/join needs, LIMIT with
+default 100 / cap 10000). Parity with
 ``chatbot/agents/intelligent_query_planner.py:102–340``.
+
+The catalog is read through analysis (``SHOW TABLES``, a table's
+resolved schema), not ``spark.catalog.listTables/listColumns``: in
+PySpark 4 those collect a local Dataset through ``toLocalIterator``,
+which starts one Spark job per partition (4–5 jobs, 0.1–0.3 s per call),
+while the same names and type strings cost no job at all.
 """
 
 from __future__ import annotations
@@ -35,6 +41,19 @@ TABLE_ALIASES: dict[str, tuple[str, ...]] = {
     "events": ("event", "activity", "log", "logs"),
     "embeddings": ("embedding", "vector", "vectors"),
 }
+
+
+def _table_names(spark: SparkSession) -> list[str]:
+    """Tables and temp views of the current database, as
+    ``spark.catalog.listTables()`` names them, without starting a job."""
+    return [r.tableName for r in spark.sql("SHOW TABLES").collect()]
+
+
+def _columns(spark: SparkSession, table: str) -> list[tuple[str, str]]:
+    """(name, type string) per column of ``table``, as
+    ``spark.catalog.listColumns(table)`` reports them, from the analyzed
+    schema."""
+    return [(f.name, f.dataType.simpleString()) for f in spark.table(table).schema]
 
 
 @dataclass
@@ -75,12 +94,12 @@ def match_tables(spark: SparkSession, question: str) -> list[str]:
     q = re.findall(r"[a-z]+", question.lower())
     qset = set(q) | {" ".join(q)}
     hits: list[str] = []
-    for tbl in spark.catalog.listTables():
-        name = tbl.name.lower()
+    for tbl in _table_names(spark):
+        name = tbl.lower()
         candidates = {name, name + "s", name.rstrip("s")}
         candidates.update(TABLE_ALIASES.get(name, ()))
         if candidates & qset or any(c in " ".join(q) for c in candidates if " " in c):
-            hits.append(tbl.name)
+            hits.append(tbl)
     return sorted(set(hits))
 
 
@@ -118,7 +137,7 @@ def extract_group_column(
     want = m.group(1).strip().replace(" ", "")
     if not want:
         return None
-    cols = [c.name for c in spark.catalog.listColumns(table)]
+    cols = [name for name, _ in _columns(spark, table)]
     for c in cols:  # exact name first
         if c.lower() == want:
             return c
@@ -153,17 +172,17 @@ def extract_measure(
     words = [w.replace(" ", "") for w in
              (m.group(2).strip(), *m.group(2).strip().split()[::-1]) if w]
     cols = [
-        c
-        for c in spark.catalog.listColumns(table)
-        if c.dataType.startswith(_NUMERIC_TYPES)
+        name
+        for name, dtype in _columns(spark, table)
+        if dtype.startswith(_NUMERIC_TYPES)
     ]
     for want in words:  # full phrase first, then each word, rightmost first
         for c in cols:
-            if c.name.lower() == want:
-                return agg, c.name
+            if c.lower() == want:
+                return agg, c
         for c in cols:
-            if want in c.name.lower().replace("_", ""):
-                return agg, c.name
+            if want in c.lower().replace("_", ""):
+                return agg, c
     return None
 
 
@@ -202,9 +221,9 @@ def extract_year_filter(
         "till": "<=",
         "through": "<=",
     }.get(cue, "=")
-    for c in spark.catalog.listColumns(table):
-        if c.dataType in ("date", "timestamp", "timestamp_ntz"):
-            return c.name, year, op
+    for name, dtype in _columns(spark, table):
+        if dtype in ("date", "timestamp", "timestamp_ntz"):
+            return name, year, op
     return None
 
 

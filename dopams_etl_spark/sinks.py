@@ -19,6 +19,7 @@ from collections.abc import Sequence
 
 from pyspark.sql import DataFrame, SparkSession
 
+from dopams_etl_spark.catalog import forget_path
 from dopams_etl_spark.operators.merge import upsert_latest_wins
 
 
@@ -128,15 +129,17 @@ class KeyedTableSink:
         """Latest-wins upsert of ``incoming`` into the table (creates it on
         first write). Equal-version re-sends replace in place, matching the
         reference's in-chunk duplicate handling (``etl_crimes.py:853–871``).
+        The ``catalog.load_table`` memo of the path is dropped afterwards,
+        since the rewrite deleted the files it listed.
         """
         restore_retired(self.spark, self.path)
         if not self.exists():
             self._initial_write(incoming)
-            return
-        if self.fmt == "delta":
+        elif self.fmt == "delta":
             self._delta_merge(incoming)
         else:
             self._parquet_merge(incoming)
+        forget_path(self.path)
 
     def _initial_write(self, df: DataFrame) -> None:
         # First batch may itself carry duplicate keys — collapse them the

@@ -286,3 +286,79 @@ def test_comparative_year_filter_executes(spark):
         since.result.rows[0][0]
         == total.result.rows[0][0] - only_95.result.rows[0][0]
     )
+
+
+# ---- catalog introspection cost -------------------------------------------
+
+# the interactive benchmark's seven question shapes
+_QUESTION_SHAPES = (
+    "How many orders are there?",
+    "Find customers named 'Customer#000000007'",
+    "Count orders by orderstatus",
+    "What is the average totalprice of orders per orderpriority?",
+    "How many orders in 1996?",
+    "Top 5: count orders by custkey",
+    "Show the first 5 events",
+)
+
+
+def _jobs_started(spark, group, fn):
+    """(fn's result, number of Spark jobs fn started), counted under a
+    job group of its own."""
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        out = fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    return out, len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_planning_and_generation_start_no_spark_job(spark):
+    """Reading the catalog to plan a question and write its SQL is
+    analysis only: no question shape starts a Spark job before execution."""
+    from dopams_etl_spark.nlq.generator import generate_sql
+
+    def plan_and_generate():
+        return [generate_sql(spark, plan_query(spark, q), q) for q in _QUESTION_SHAPES]
+
+    sqls, jobs = _jobs_started(spark, "nlq-plan-generate-budget", plan_and_generate)
+    assert jobs == 0
+    assert "year(o_orderdate) = 1996" in sqls[4] and "AVG(o_totalprice)" in sqls[3]
+    assert "GROUP BY o_orderstatus" in sqls[2] and sqls[6].endswith("LIMIT 5")
+
+
+def test_count_question_job_budget(spark):
+    from dopams_etl_spark.nlq.generator import answer_question
+
+    ans, jobs = _jobs_started(
+        spark, "nlq-answer-budget", lambda: answer_question(spark, "How many orders are there?")
+    )
+    assert ans.ok and ans.result.rows[0]["n"] == 1500
+    assert jobs <= 2
+
+
+def test_catalog_helpers_match_spark_catalog(spark):
+    """The job-free helpers report exactly what spark.catalog does, for
+    every registered view and for the type strings the planner matches on."""
+    from dopams_etl_spark.nlq.planner import _columns, _table_names
+
+    spark.sql(
+        "CREATE OR REPLACE TEMP VIEW nlq_parity_types AS SELECT "
+        "CAST(1.5 AS decimal(12,2)) AS amount, array(1, 2) AS xs, "
+        "named_struct('a', 1, 'b', 'x') AS st, map('k', 1.0D) AS m, "
+        "DATE'2020-01-02' AS d, TIMESTAMP_NTZ'2020-01-02 03:04:05' AS tn, "
+        "TIMESTAMP'2020-01-02 03:04:05' AS ts, 'x' AS s, CAST(1 AS smallint) AS si"
+    )
+    try:
+        names = _table_names(spark)
+        assert "nlq_parity_types" in names and "orders" in names
+        assert set(names) == {t.name for t in spark.catalog.listTables()}
+        for t in names:
+            want = [(c.name, c.dataType) for c in spark.catalog.listColumns(t)]
+            assert _columns(spark, t) == want, t
+        assert dict(_columns(spark, "nlq_parity_types"))["amount"] == "decimal(12,2)"
+    finally:
+        spark.catalog.dropTempView("nlq_parity_types")

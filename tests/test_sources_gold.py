@@ -552,3 +552,105 @@ def test_python_datasource_pushdown_property(spark):
                    (60, 59), (100, 300)]:
         want = [(i, (i * KNUTH) % MOD) for i in range(max(lo, 0), min(hi, 99) + 1)]
         assert scan(lo, hi) == want, (lo, hi)
+
+
+def test_sorted_lookups_keep_rows_and_order_without_range_exchange(spark, tmp_path):
+    """Both sorted lookups return the rows and the sort-key sequence of
+    the plain ``orderBy`` form, NULL dates and ties included, without the
+    range-partitioning exchange whose bound sampling rescans the table."""
+    from collections import Counter
+
+    from dopams_etl_spark.gold import (
+        get_accused_crime_history,
+        load_gold,
+        refresh_gold,
+        search_person_by_name,
+    )
+
+    out = str(tmp_path / "gold")
+    refresh_gold(spark, SF, out, ("accuseds_mv", "criminal_profiles_mv"))
+    accused = load_gold(spark, out, "accuseds_mv")
+    # person 7 has rows tied on (fir_date, crime_id); add NULL-dated rows
+    # that tie on crime_id with each other and with a dated row
+    crime = accused.filter(F.col("accused_id").endswith(":7")).first()["crime_id"]
+    extra = (
+        accused.limit(3)
+        .withColumn("accused_id", F.concat(F.lit("x:"), F.monotonically_increasing_id(), F.lit(":7")))
+        .withColumn("crime_id", F.lit(crime))
+        .withColumn("fir_date", F.lit(None).cast("string"))
+        .withColumn("fir_year", F.lit(None).cast("int"))
+    )
+    extra.write.mode("append").partitionBy("fir_year").parquet(f"{out}/accuseds_mv")
+
+    def reference(name, cond, *keys):
+        return load_gold(spark, out, name).filter(cond).orderBy(*keys).collect()
+
+    cases = [
+        (
+            get_accused_crime_history(spark, out, 7),
+            reference("accuseds_mv", F.col("accused_id").endswith(":7"),
+                      F.col("fir_date").desc(), F.col("crime_id").asc()),
+            ("fir_date", "crime_id"),
+        )
+    ]
+    for term in ("widget", "a"):
+        cases.append((
+            search_person_by_name(spark, out, term),
+            reference("criminal_profiles_mv", F.lower(F.col("person_name")).contains(term),
+                      F.col("crime_count").desc(), F.col("person_id").asc()),
+            ("crime_count", "person_id"),
+        ))
+    for df, want, keys in cases:
+        got = df.collect()
+        assert Counter(map(tuple, got)) == Counter(map(tuple, want))
+        assert [tuple(r[k] for k in keys) for r in got] == [tuple(r[k] for k in keys) for r in want]
+        plan = df._jdf.queryExecution().executedPlan().toString().lower()
+        assert "rangepartitioning" not in plan, plan
+    history = cases[0][0].collect()
+    assert history[-1]["fir_date"] is None and len({r["crime_id"] for r in history[-3:]}) == 1
+    assert len(cases[1][1]) > len({r["crime_count"] for r in cases[1][1]})  # ties
+
+
+def _warehouse_with_orders_sink(spark, tmp_path):
+    """A copy of the sf0.001 tables whose ``orders`` is a sink directory
+    (every row at version 0); returns (dir, sink, orders frame)."""
+    import shutil
+
+    from dopams_etl_spark.catalog import TABLES, load_table
+    from dopams_etl_spark.sinks import KeyedTableSink
+
+    wh = tmp_path / "wh"
+    wh.mkdir()
+    for t in TABLES:
+        if t != "orders":
+            shutil.copyfile(f"{SF}/{t}.parquet", wh / f"{t}.parquet")
+    orders = load_table(spark, "orders", SF).withColumn("v", F.lit(0).cast("bigint"))
+    sink = KeyedTableSink(spark, str(wh / "orders.parquet"), "o_orderkey", "v")
+    sink.upsert(orders)
+    return str(wh), sink, orders
+
+
+def test_upsert_evicts_the_catalog_memo(spark, tmp_path):
+    """A sink rewrite deletes the files a memoized ``load_table`` plan
+    listed; the same session then reads the new table, and a gold refresh
+    over the directory succeeds."""
+    from dopams_etl_spark.catalog import load_table
+    from dopams_etl_spark.gold import refresh_gold
+
+    wh, sink, orders = _warehouse_with_orders_sink(spark, tmp_path)
+    before = load_table(spark, "orders", wh).count()
+    fresh = orders.withColumn("o_orderkey", F.col("o_orderkey") + 10_000_000).limit(7)
+    sink.upsert(fresh)
+    assert load_table(spark, "orders", wh).count() == before + 7
+    counts = refresh_gold(spark, wh, str(tmp_path / "gold"), ("firs_mv",))
+    assert counts["firs_mv"] == before + 7
+
+
+def test_compact_table_evicts_the_catalog_memo(spark, tmp_path):
+    from dopams_etl_spark.catalog import load_table
+    from dopams_etl_spark.gold import compact_table
+
+    wh, _, _ = _warehouse_with_orders_sink(spark, tmp_path)
+    before = load_table(spark, "orders", wh).count()
+    compact_table(spark, f"{wh}/orders.parquet/")
+    assert load_table(spark, "orders", wh).count() == before
