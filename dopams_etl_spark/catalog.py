@@ -50,10 +50,9 @@ BROADCAST_TABLES = frozenset({"region", "nation"})
 # object itself: a ``newSession()`` (same applicationId, different conf)
 # gets its own entries, and a collected session's plans evict with it.
 # The cached plan snapshots the file listing at first read, so whatever
-# replaces a table's files must drop its entries: the library's writers
-# (``KeyedTableSink.upsert``, ``gold.compact_table``) call
-# ``forget_path``; other writers call it too, or readers pass
-# ``cache=False``.
+# replaces a table's files must drop its entries with ``forget_path``, as
+# the library's writers (``KeyedTableSink.upsert``,
+# ``gold.compact_table``) do.
 _TABLE_CACHE: "weakref.WeakKeyDictionary[SparkSession, dict[tuple[str, str], DataFrame]]" = (
     weakref.WeakKeyDictionary()
 )
@@ -77,12 +76,10 @@ def load_table(
     spark: SparkSession,
     name: str,
     sf_dir: str = DEFAULT_SF_DIR,
-    cache: bool = True,
 ) -> DataFrame:
     """Read one catalog table (memoized per session — see _TABLE_CACHE;
     the cached plan pins its first file listing, so a writer replacing
-    the table's files calls ``forget_path``, or the reader passes
-    ``cache=False``).
+    the table's files calls ``forget_path``).
 
     No ``mergeSchema`` — the testdata schemas are fixed, and footer merging
     costs a full file listing + footer read per query. Schema evolution is
@@ -99,11 +96,10 @@ def load_table(
     """
     if name not in TABLES:
         raise KeyError(f"unknown table {name!r}; catalog has {TABLES}")
-    per_session = _TABLE_CACHE.setdefault(spark, {}) if cache else None
-    if per_session is not None:
-        cached = per_session.get((sf_dir, name))
-        if cached is not None:
-            return cached
+    per_session = _TABLE_CACHE.setdefault(spark, {})
+    cached = per_session.get((sf_dir, name))
+    if cached is not None:
+        return cached
     if name == "events":
         # Harmless where the native ntz read applies; required on builds
         # where the TIMESTAMP(NANOS) scan would otherwise raise
@@ -125,8 +121,7 @@ def load_table(
     # relational queries (shuffling raw rows costs more than the map side
     # saves when per-row work is cheap); only the per-row-expensive
     # text/vector operators repartition, via partitioning.ensure_parallelism.
-    if per_session is not None:
-        per_session[(sf_dir, name)] = df
+    per_session[(sf_dir, name)] = df
     return df
 
 

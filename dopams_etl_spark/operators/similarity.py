@@ -1,10 +1,13 @@
 """Embedding similarity search (training-data pipeline surface).
 
 Brute-force cosine top-k as the exact baseline (JVM ``zip_with``/``aggregate``
-dot products — no Python in the row path), plus an LSH-bucketed approximate
-variant for the 100 TB path (random-hyperplane signatures computed from a
-deterministic seed; candidate pairs only form within a bucket) and an
-embedding-cosine near-dup operator.
+dot products, or — where a call site opts in with ``impl="arrow"`` — one
+NumPy kernel, ``_cos_block``, that replicates that fold bit for bit over
+Arrow blocks; ``semantic_dedup`` scores its cells with the same kernel),
+plus an LSH-bucketed approximate variant for the 100 TB path
+(random-hyperplane signatures computed from a deterministic seed;
+candidate pairs only form within a bucket) and an embedding-cosine
+near-dup operator.
 
 Reference analog: the MiniLM embedding resolver with cosine top-3 +
 thresholds (``core/geo_resolver.py:22–272``) — generalized to a
@@ -39,7 +42,8 @@ def _norm(a: Column | str) -> Column:
 
 
 def cosine(a: Column | str, b: Column | str) -> Column:
-    return _dot(a, b) / (_norm(a) * _norm(b))
+    """Cosine of two vector columns; NULL when either norm is 0."""
+    return F.try_divide(_dot(a, b), _norm(a) * _norm(b))
 
 
 def _cos_pre(a: Column | str, b: Column | str, na: Column, nb: Column) -> Column:
@@ -49,7 +53,7 @@ def _cos_pre(a: Column | str, b: Column | str, na: Column, nb: Column) -> Column
     candidates no longer re-aggregates each side's self-norm once per
     PAIR (3 array folds/pair → 1). Callers materialize ``_norm(v)`` as a
     column before the join and pass it here."""
-    return _dot(a, b) / (na * nb)
+    return F.try_divide(_dot(a, b), na * nb)
 
 
 MAX_BROADCAST_CORPUS_ROWS = 2_000_000
@@ -104,9 +108,12 @@ def _seq_dots(P, C):
     whose blocked/FMA accumulation reassociates the sum."""
     import numpy as np
 
+    Ct = np.ascontiguousarray(C.T)  # one contiguous row per dimension
     acc = np.zeros((P.shape[0], C.shape[0]))
+    prod = np.empty_like(acc)
     for j in range(P.shape[1]):
-        acc += P[:, j : j + 1] * C[None, :, j][0]
+        np.multiply(P[:, j : j + 1], Ct[j], out=prod)
+        acc += prod
     return acc
 
 
@@ -119,46 +126,80 @@ def _seq_norms(M):
     return np.sqrt(acc)
 
 
-def _fold_cos_py(pv, cv):
-    """Row-at-a-time replica of round(_cos_pre(...), 6) for NON-conforming
-    vectors (ragged lengths, NULL elements): zip_with pads the shorter
-    side with NULL, a NULL product poisons the dot to NULL, a NULL
-    element poisons that side's norm — any NULL operand makes the cosine
-    NULL. Python floats are IEEE binary64 with correctly-rounded ops,
-    identical bits to the JVM."""
-    import math
-
-    if pv is None or cv is None or len(pv) != len(cv):
-        return None
-    na = 0.0
-    for x in pv:
-        if x is None:
-            return None
-        na += float(x) * float(x)
-    nb = 0.0
-    for y in cv:
-        if y is None:
-            return None
-        nb += float(y) * float(y)
-    dot = 0.0
-    for x, y in zip(pv, cv):
-        dot += float(x) * float(y)
+def _padded(vecs, width: int):
+    """(rows × width zero-padded matrix, NULL-row mask, widths) of a list
+    of vectors; a NULL vector or one holding a NULL element is a NULL
+    row (left all zero)."""
     import numpy as np
 
-    cos = float(
-        np.float64(dot) / (np.float64(math.sqrt(na)) * np.float64(math.sqrt(nb)))
+    M = np.zeros((len(vecs), width))
+    null = np.zeros(len(vecs), dtype=bool)
+    widths = np.zeros(len(vecs), dtype=np.int64)
+    for i, v in enumerate(vecs):
+        if v is None or None in v:
+            null[i] = True
+        else:
+            M[i, : len(v)] = v
+            widths[i] = len(v)
+    return M, null, widths
+
+
+def _cos_block(p_vecs, c_vecs):
+    """NumPy replica of ``round(_cos_pre(p, c, _norm(p), _norm(c)), 6)``
+    for every (probe, corpus) pair of a block — the one exact-cosine
+    kernel behind the Arrow top-k scorer and ``semantic_dedup``. Returns
+    ``(rounded, null_mask)``, both (len(p_vecs), len(c_vecs));
+    ``rounded`` is meaningless where ``null_mask`` is set.
+
+    A pair is NULL where the expression is: either side holds a NULL
+    element (a NULL product poisons the dot and the norm), the widths
+    differ (``zip_with`` pads the shorter side with NULL), or the norm
+    product is 0 (``try_divide``). Zero-padding both sides to the
+    block's widest vector changes no bit of any other pair: the fold
+    accumulator starts at +0.0, and a round-to-nearest sum is -0.0 only
+    when both addends are, so it never becomes -0.0 and adding the
+    padding's +0.0 products leaves it unchanged."""
+    import numpy as np
+
+    width = max((len(v) for v in (*p_vecs, *c_vecs) if v is not None), default=0)
+    P, p_null, p_w = _padded(p_vecs, width)
+    C, c_null, c_w = _padded(c_vecs, width)
+    with np.errstate(divide="ignore", invalid="ignore", over="ignore"):
+        denom = _seq_norms(P)[:, None] * _seq_norms(C)[None, :]
+        cos = _seq_dots(P, C) / denom
+    null = (
+        p_null[:, None] | c_null[None, :] | (p_w[:, None] != c_w[None, :])
+        | (denom == 0.0)
     )
-    return float(_spark_round6(np.array([cos]))[0])
+    cos[null] = 0.0
+    return _spark_round6(cos.ravel()).reshape(cos.shape), null
+
+
+def _eq_codes(*cols):
+    """Integer codes under which two values are equal exactly when Spark's
+    ``=`` says so (NaN equals NaN, -0.0 equals 0.0): one shared code
+    space over all ``cols``; NULL is -1."""
+    import numpy as np
+
+    seen: dict = {}
+    nan = object()
+
+    def code(x):
+        if x is None:
+            return -1
+        return seen.setdefault(nan if x != x else x, len(seen))
+
+    return [np.array([code(x) for x in col], dtype=np.int64) for col in cols]
 
 
 def _arrow_block_scorer(k: int, include_self: bool, has_excl: bool, pa_p, pa_c):
     """mapInArrow function over (ps, cs) packed block rows: score every
-    in-block (probe, corpus) pair with the exact fold arithmetic, apply
-    the join-condition exclusions, and emit each probe's per-block top-k
+    in-block (probe, corpus) pair with ``_cos_block``, apply the
+    join-condition exclusions, and emit each probe's per-block top-k
     under EXACTLY the global ordering (NaN greatest — Double.compare —
-    then value desc, NULL cosines last, c_id asc). The global top-k of a
-    union is the top-k of per-block top-ks, so the downstream window
-    reproduces the expression path's rows verbatim."""
+    then value desc, NULL cosines last, c_id asc with NULLS FIRST). The
+    global top-k of a union is the top-k of per-block top-ks, so the
+    downstream window reproduces the expression path's rows verbatim."""
 
     def score(batches):
         import numpy as np
@@ -172,36 +213,38 @@ def _arrow_block_scorer(k: int, include_self: bool, has_excl: bool, pa_p, pa_c):
                 ps, cs = row["ps"], row["cs"]
                 if not ps or not cs:
                     continue
-                p_ids = [s["i"] for s in ps]
                 c_ids = [s["i"] for s in cs]
-                p_vecs = [s["v"] for s in ps]
                 c_vecs = [s["v"] for s in cs]
-                p_ex = [s["e"] for s in ps] if has_excl else None
-                c_ex = [s["e"] for s in cs] if has_excl else None
-                d = len(c_vecs[0]) if c_vecs[0] is not None else -1
-                clean = (
-                    d >= 0
-                    and None not in p_ids
-                    and None not in c_ids
-                    and all(
-                        v is not None and len(v) == d and None not in v
-                        for v in p_vecs
+                # c_id ASC, NULLS FIRST, as one integer sort key
+                c_rank = np.empty(len(cs), dtype=np.int64)
+                c_rank[
+                    sorted(range(len(cs)), key=lambda j: (c_ids[j] is not None, c_ids[j]))
+                ] = np.arange(len(cs))
+                p_code, c_code = _eq_codes([s["i"] for s in ps], c_ids)
+                if has_excl:
+                    pe_code, ce_code = _eq_codes(
+                        [s["e"] for s in ps], [s["e"] for s in cs]
                     )
-                    and all(
-                        v is not None and len(v) == d and None not in v
-                        for v in c_vecs
-                    )
-                )
-                if clean:
-                    _score_clean_block(
-                        np, p_ids, c_ids, p_vecs, c_vecs, p_ex, c_ex,
-                        k, include_self, out_p, out_c, out_v,
-                    )
-                else:
-                    _score_general_block(
-                        p_ids, c_ids, p_vecs, c_vecs, p_ex, c_ex,
-                        k, include_self, out_p, out_c, out_v,
-                    )
+                for lo in range(0, len(ps), _ARROW_PROBE_SLICE):
+                    hi = min(lo + _ARROW_PROBE_SLICE, len(ps))
+                    rounded, null = _cos_block([s["v"] for s in ps[lo:hi]], c_vecs)
+                    # cat: 0 = NaN (sorts greatest), 1 = value, 2 = NULL
+                    # (desc NULLS LAST), 3 = excluded by the join condition
+                    cat = np.where(null, 2, np.where(np.isnan(rounded), 0, 1))
+                    if not include_self:
+                        # p_id != c_id is false or NULL: the pair is dropped
+                        pc, cc = p_code[lo:hi, None], c_code[None, :]
+                        cat[(pc == cc) | (pc < 0) | (cc < 0)] = 3
+                    if has_excl:
+                        # ~eqNullSafe: equal labels or both NULL disqualify
+                        cat[pe_code[lo:hi, None] == ce_code[None, :]] = 3
+                    val_key = np.where(cat == 1, -rounded, 0.0)
+                    for i in range(hi - lo):
+                        sel = np.lexsort((c_rank, val_key[i], cat[i]))[:k]
+                        for j in sel[cat[i][sel] < 3]:
+                            out_p.append(ps[lo + i]["i"])
+                            out_c.append(c_ids[j])
+                            out_v.append(None if null[i, j] else float(rounded[i, j]))
             if out_p:
                 yield pa.RecordBatch.from_arrays(
                     [
@@ -213,83 +256,6 @@ def _arrow_block_scorer(k: int, include_self: bool, has_excl: bool, pa_p, pa_c):
                 )
 
     return score
-
-
-def _score_clean_block(
-    np, p_ids, c_ids, p_vecs, c_vecs, p_ex, c_ex, k, include_self,
-    out_p, out_c, out_v,
-):
-    """Vectorized scoring of a conforming block (every vector the same
-    width, no NULL elements/ids): exact-fold dots + norms, Spark-round,
-    exclusion masks, lexsort top-k per probe."""
-    C = np.asarray(c_vecs, dtype=np.float64)
-    cn = _seq_norms(C)
-    cid_arr = np.asarray(c_ids)
-    for lo in range(0, len(p_ids), _ARROW_PROBE_SLICE):
-        hi = min(lo + _ARROW_PROBE_SLICE, len(p_ids))
-        P = np.asarray(p_vecs[lo:hi], dtype=np.float64)
-        pn = _seq_norms(P)
-        with np.errstate(divide="ignore", invalid="ignore"):
-            cos = _seq_dots(P, C) / (pn[:, None] * cn[None, :])
-        rounded = _spark_round6(cos.ravel()).reshape(cos.shape)
-        isnan = np.isnan(rounded)
-        # cat: 0 = NaN (sorts greatest, Double.compare), 1 = value,
-        # 3 = excluded (p_id == c_id under the default join condition;
-        # null-safe-equal exclude_same labels)
-        cat = np.where(isnan, 0, 1)
-        if not include_self:
-            eq = np.asarray(p_ids[lo:hi])[:, None] == cid_arr[None, :]
-            cat = np.where(eq, 3, cat)
-        if p_ex is not None:
-            pe = np.asarray(p_ex[lo:hi], dtype=object)[:, None]
-            ce = np.asarray(c_ex, dtype=object)[None, :]
-            same = (pe == ce) | ((pe == None) & (ce == None))  # noqa: E711
-            cat = np.where(same, 3, cat)
-        val_key = np.where(cat == 1, rounded, 0.0)
-        for i in range(hi - lo):
-            order = np.lexsort((cid_arr, -val_key[i], cat[i]))
-            sel = order[cat[i][order] < 3][:k]
-            for j in sel:
-                out_p.append(p_ids[lo + i])
-                out_c.append(c_ids[int(j)])
-                out_v.append(float(rounded[i, int(j)]))
-
-
-def _score_general_block(
-    p_ids, c_ids, p_vecs, c_vecs, p_ex, c_ex, k, include_self,
-    out_p, out_c, out_v,
-):
-    """Row-at-a-time fallback for non-conforming blocks (ragged widths,
-    NULL vector elements, NULL ids under the self-exclusion condition) —
-    replicates the expression path's NULL semantics exactly; only
-    degenerate fixtures and unit-test edge cases take it."""
-    import math
-
-    for pi, (pid, pv) in enumerate(zip(p_ids, p_vecs)):
-        cands = []
-        for ci, (cid, cv) in enumerate(zip(c_ids, c_vecs)):
-            if not include_self and (pid is None or cid is None or pid == cid):
-                continue  # p_id != c_id is NULL/false -> pair dropped
-            if p_ex is not None:
-                pe, ce = p_ex[pi], c_ex[ci]
-                if (pe is None and ce is None) or (
-                    pe is not None and ce is not None and pe == ce
-                ):
-                    continue  # ~eqNullSafe disqualifies
-            cos = _fold_cos_py(pv, cv)
-            if cos is None:
-                cat, vkey = 2, 0.0  # NULL cosine: desc NULLS LAST
-            elif math.isnan(cos):
-                cat, vkey = 0, 0.0  # NaN: greatest under Double.compare
-            else:
-                cat, vkey = 1, -cos
-            # c_id asc tie-break with NULLS FIRST (Spark's asc default)
-            cands.append((cat, vkey, cid is not None, cid, cos))
-        cands.sort(key=lambda t: (t[0], t[1], t[2], t[3] if t[2] else 0))
-        for cat, _vk, _nn, cid, cos in cands[:k]:
-            out_p.append(pid)
-            out_c.append(cid)
-            out_v.append(cos)
 
 
 def cosine_topk(
@@ -313,7 +279,6 @@ def cosine_topk(
     ~0.3 s per million pairs, so the Arrow path pays above ~1.3 M
     scored pairs (measured r16 A/B: 4 M-pair mutual_nn −45 %, 40 k-pair
     probes +0.4 s) — callers opt in where probe×corpus is large.
-    ``SPARK_GRAFT_COS_IMPL`` overrides both ways for A/B.
 
     The corpus is broadcast, so this is size-gated: pass ``corpus_rows``
     (or let it count) and anything above ``MAX_BROADCAST_CORPUS_ROWS``
@@ -347,27 +312,33 @@ def cosine_topk(
         probe, corpus, probe_id, corpus_id, vec_col, n, k,
         include_self, exclude_same, impl,
     )
-    from pyspark.sql.types import NumericType
+    from pyspark.sql.types import IntegralType
 
-    if k == 1 and isinstance(corpus.schema[corpus_id].dataType, NumericType):
+    if k == 1 and isinstance(corpus.schema[corpus_id].dataType, IntegralType):
         # r16 (guide §2.4): top-1-per-key needs no window SORT — one hash
         # aggregate with map-side partials replaces Exchange+Sort+Window
         # over every scored pair. Identical rows: max(struct(cos_sim,
-        # -c_id)) realizes exactly the row_number ordering — struct
-        # comparison and SortOrder share Double.compare semantics (NaN
-        # greatest, -0.0 < 0.0), the negated id gives the c_id ASC
-        # tie-break, a NULL cos_sim loses to any non-NULL in both (desc
-        # NULLS LAST ≡ null-smallest under max), and an all-NULL group
-        # surfaces its lowest c_id in both. Numeric-id gate: the negation
-        # tie-break needs an ordered negatable type; other id types keep
-        # the window path.
-        best = F.max(F.struct(F.col("cos_sim"), (-F.col("c_id")).alias("nc")))
+        # c_id IS NULL, ~c_id)) realizes exactly the row_number ordering —
+        # struct comparison and SortOrder share Double.compare semantics
+        # (NaN greatest, -0.0 < 0.0), a NULL cos_sim loses to any non-NULL
+        # in both (desc NULLS LAST ≡ null-smallest under max), the null
+        # flag puts a NULL c_id first (asc NULLS FIRST), and ~c_id
+        # (= -c_id - 1, no overflow at the minimum id) gives the c_id ASC
+        # tie-break. Integral-id gate: bitwise NOT needs an integer type;
+        # other id types keep the window path.
+        best = F.max(
+            F.struct(
+                F.col("cos_sim"),
+                F.col("c_id").isNull().alias("null_id"),
+                F.bitwise_not(F.col("c_id")).alias("nc"),
+            )
+        )
         return (
             scored.groupBy("p_id")
             .agg(best.alias("b"))
             .select(
                 "p_id",
-                (-F.col("b.nc")).alias("c_id"),
+                F.bitwise_not(F.col("b.nc")).alias("c_id"),
                 F.col("b.cos_sim").alias("cos_sim"),
                 F.lit(1).alias("rank"),
             )
@@ -398,11 +369,10 @@ def _cosine_scored_pairs(
     path — probe and corpus pack into chunk rows
     (collect_list of (id, vec) structs), a crossJoin of P probe × C
     corpus chunks fans out bounded blocks, and one ``mapInArrow`` scores
-    each block with NumPy using the EXACT fold arithmetic + Spark-round
-    replica (bit-parity proven: 0 mismatches over all sf0.1 pairs, plus
-    strict oracle at 3 SFs) and emits per-block top-k candidates, which
-    the caller's global window/aggregate reduces to the identical final
-    rows. Replaces the interpreted zip_with/aggregate HOF fold that ran
+    each block with ``_cos_block`` (bit-parity with the fold: property
+    test against the expression engine, plus strict oracle at 3 SFs) and
+    emits per-block top-k candidates, which the caller's global
+    window/aggregate reduces to the identical final rows. Replaces the interpreted zip_with/aggregate HOF fold that ran
     per PAIR (CodegenFallback: boxed per-element evaluation — guide
     §4.1/§4.2/§4.3's "hand whole batches to vectorized native code").
     The shuffle moves each side C resp. P times as packed metadata-sized
@@ -411,11 +381,9 @@ def _cosine_scored_pairs(
     ``F.broadcast`` ships the C packed rows exactly like the old
     broadcast join shipped the raw rows).
 
-    ``SPARK_GRAFT_COS_IMPL=expr`` (or a shape the Arrow path does not
-    handle: mismatched id/label types between the sides, non-array or
-    non-numeric vector columns) keeps the r15 expression path."""
-    import os
-
+    A shape the Arrow path does not handle (mismatched id/label types
+    between the sides, non-array or non-numeric vector columns) keeps
+    the r15 expression path."""
     from pyspark.sql.types import ArrayType, NumericType
 
     p_dt = probe.schema[probe_id].dataType
@@ -423,7 +391,7 @@ def _cosine_scored_pairs(
     pv_dt = probe.schema[vec_col].dataType
     cv_dt = corpus.schema[vec_col].dataType
     arrow_ok = (
-        os.environ.get("SPARK_GRAFT_COS_IMPL", impl) != "expr"
+        impl == "arrow"
         and p_dt == c_dt
         and isinstance(pv_dt, ArrayType)
         and isinstance(cv_dt, ArrayType)
@@ -907,17 +875,15 @@ def semantic_dedup(
             F.lit(None).cast("bigint").alias("cell"),
             F.lit(True).alias("keep"),
         ).limit(0)
-    # r15 (guide §2.3): materialize each row's norm once; the per-cell
-    # pair join then folds ONE dot product per candidate pair instead of
-    # re-aggregating both self-norms per pair — bit-identical cosines
-    # (same division tree), ~3× less per-pair arithmetic.
+    # r15 (guide §2.3): materialize each row's norm once so the centroid
+    # assignment does not re-fold it per centroid (same division tree,
+    # bit-identical).
     #
-    # r15 (guide §2): ensure_parallelism before the pairwise probe — a
+    # r15 (guide §2): ensure_parallelism before the assignment — a
     # small/compacted parquet scans as ONE task (one row group), which
-    # serializes the Σ|cell|² dot-product probe on a single core; a
-    # no-op whenever the input is already at least default-parallel
-    # (the 100 TB case). Set semantics of the semi-join + distinct are
-    # partitioning-invariant, so results are unchanged.
+    # serializes the per-row centroid folds on a single core; a no-op
+    # whenever the input is already at least default-parallel (the
+    # 100 TB case). The per-cell result is partitioning-invariant.
     from dopams_etl_spark.partitioning import ensure_parallelism
 
     with_norm = ensure_parallelism(rows).select("cid", "v", _norm("v").alias("nrm"))
@@ -928,83 +894,50 @@ def semantic_dedup(
     # r16 (guide §4.1/§4.2, replacing the r15 left-semi + keep-join): the
     # whole per-cell EXISTS probe is one grouped Arrow map — ONE exchange
     # on the cell key, one Python call per CELL (cells are few by design,
-    # never the per-group-overhead trap), and the Σ|cell|² cosine folds
-    # run vectorized in NumPy with the EXACT fold-order accumulation +
-    # Spark-round(6) replica the cosine_topk Arrow path proved
-    # bit-identical. Replaces: two more recomputations of the
+    # never the per-group-overhead trap), and the Σ|cell|² cosines run in
+    # ``_cos_block``. Replaces: two more recomputations of the
     # norm+assignment projection (the self-join's probe/build sides), a
     # per-pair interpreted zip_with/aggregate fold in the join condition,
     # the DISTINCT, and the final keep-join — the (id, cell, keep) result
     # comes straight out of the grouped map (duplicated input rows emit
     # duplicated output rows, exactly as the old left keep-join did).
-    # Spark comparison semantics replicated per pair: keep(a) = NOT
-    # EXISTS b in cell with b.id < a.id (NULL ids never match) and
-    # round6(cos) >= threshold, where NaN >= x is TRUE (Spark's total
-    # NaN ordering, probed) and a NULL cosine (ragged/NULL-element
-    # vectors) never matches.
+    # applyInArrow, not applyInPandas: pandas turns a NULL vector element
+    # into NaN, which would score as a match instead of a NULL cosine.
     idt = corpus.schema[id_col].dataType.simpleString()
-    fn = _semantic_dedup_cell_fn(threshold)
     return (
-        assigned.select("id", "v", "cell")
+        assigned.select("id", "v", F.col("cell").cast(idt).alias("cell"))
         .groupBy("cell")
-        .applyInPandas(fn, f"id {idt}, cell {idt}, keep boolean")
+        .applyInArrow(
+            _semantic_dedup_cell_fn(threshold), f"id {idt}, cell {idt}, keep boolean"
+        )
     )
 
 
 def _semantic_dedup_cell_fn(threshold: float):
     """Per-cell grouped-map body for ``semantic_dedup``: emit every input
-    row with its keep flag. Conforming cells (equal-width vectors, no
-    NULL elements/ids) vectorize; anything else replays the expression
-    semantics row-at-a-time via ``_fold_cos_py``."""
+    row with its keep flag. Spark comparison semantics per pair: keep(a) =
+    NOT EXISTS b in the cell with b.id < a.id (NULL ids never match) and
+    round6(cos) >= threshold, where NaN >= x is TRUE (Spark's total NaN
+    ordering) and a NULL cosine never matches."""
 
-    def per_cell(pdf):
-        import math
-
+    def per_cell(table):
         import numpy as np
-        import pandas as pd
+        import pyarrow as pa
 
-        ids = list(pdf["id"])
-        vecs = [None if v is None else list(v) for v in pdf["v"]]
-        n = len(ids)
-        d = len(vecs[0]) if n and vecs[0] is not None else -1
-        clean = (
-            n > 0
-            and d >= 0
-            and not any(i is None for i in ids)
-            and all(v is not None and len(v) == d and None not in v for v in vecs)
-        )
-        if clean:
-            M = np.asarray(vecs, dtype=np.float64)
-            nrm = _seq_norms(M)
-            id_arr = np.asarray(ids)
-            lower = id_arr[None, :] < id_arr[:, None]  # [a, b]: b.id < a.id
-            drop = np.zeros(n, dtype=bool)
-            for lo in range(0, n, _ARROW_PROBE_SLICE):
-                hi = min(lo + _ARROW_PROBE_SLICE, n)
-                with np.errstate(divide="ignore", invalid="ignore"):
-                    cos = _seq_dots(M[lo:hi], M) / (
-                        nrm[lo:hi, None] * nrm[None, :]
-                    )
-                r = _spark_round6(cos.ravel()).reshape(cos.shape)
-                hit = (r >= threshold) | np.isnan(r)  # Spark: NaN >= x is TRUE
-                drop[lo:hi] = (hit & lower[lo:hi]).any(axis=1)
-            keep = ~drop
-        else:
-            keep_l = []
-            for i in range(n):
-                dropped = False
-                if ids[i] is not None:
-                    for j in range(n):
-                        if ids[j] is None or not (ids[j] < ids[i]):
-                            continue
-                        cos = _fold_cos_py(vecs[i], vecs[j])
-                        if cos is not None and (math.isnan(cos) or cos >= threshold):
-                            dropped = True
-                            break
-                keep_l.append(not dropped)
-            keep = keep_l
-        return pd.DataFrame(
-            {"id": pdf["id"], "cell": pdf["cell"], "keep": keep}
+        ids = table.column("id").to_pylist()
+        vecs = table.column("v").to_pylist()
+        # id order as dense ranks; NULL ids rank -1 and never match
+        rank_of = {v: r for r, v in enumerate(sorted({i for i in ids if i is not None}))}
+        rank = np.array([-1 if i is None else rank_of[i] for i in ids])
+        drop = np.zeros(len(ids), dtype=bool)
+        for lo in range(0, len(ids), _ARROW_PROBE_SLICE):
+            hi = min(lo + _ARROW_PROBE_SLICE, len(ids))
+            rounded, null = _cos_block(vecs[lo:hi], vecs)
+            hit = ~null & ((rounded >= threshold) | np.isnan(rounded))
+            lower = (rank[None, :] >= 0) & (rank[None, :] < rank[lo:hi, None])
+            drop[lo:hi] = (hit & lower).any(axis=1)
+        return pa.table(
+            {"id": table.column("id"), "cell": table.column("cell"), "keep": ~drop}
         )
 
     return per_cell

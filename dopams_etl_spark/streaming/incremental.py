@@ -22,7 +22,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
 from pyspark.sql.types import StructType
 
-from dopams_etl_spark.operators.merge import upsert_latest_wins
+from dopams_etl_spark.sinks import KeyedTableSink
 
 
 def read_stream_parquet(spark: SparkSession, path: str, schema: StructType) -> DataFrame:
@@ -130,24 +130,18 @@ def stream_upsert_parquet(
     keys: str | list[str],
     version_col: str,
 ) -> StreamingQuery:
-    """S7-as-a-stream: each micro-batch merges into the parquet target with
-    the SAME latest-wins operator the batch path uses (``foreachBatch``).
-
-    Read-merge-overwrite is the Delta-less MERGE; on a real deployment the
-    target would be Delta/Iceberg and this body becomes ``MERGE INTO``.
+    """S7-as-a-stream: each micro-batch upserts into the parquet target
+    through the SAME ``KeyedTableSink`` the batch path uses
+    (``foreachBatch``): the latest-wins merge is staged, then swapped in,
+    so a crash mid-batch leaves the previous table readable. On a real
+    deployment the target would be Delta/Iceberg and the sink's
+    ``MERGE INTO`` path applies.
     """
 
     def merge_batch(batch: DataFrame, _batch_id: int) -> None:
-        spark = batch.sparkSession
-        try:
-            existing = spark.read.parquet(target_path)
-        except Exception:
-            existing = spark.createDataFrame([], batch.schema)
-        merged = upsert_latest_wins(existing, batch, keys, version_col)
-        # Two-phase write: the merge reads the files the write replaces.
-        tmp = target_path.rstrip("/") + "__staging"
-        merged.write.mode("overwrite").parquet(tmp)
-        spark.read.parquet(tmp).write.mode("overwrite").parquet(target_path)
+        KeyedTableSink(
+            batch.sparkSession, target_path, keys, version_col, fmt="parquet"
+        ).upsert(batch)
 
     return (
         stream.writeStream.foreachBatch(merge_batch)

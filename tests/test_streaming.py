@@ -111,6 +111,33 @@ def test_stream_upsert_latest_wins(spark, tmp_path):
     assert final.filter(F.col("value") == -1.0).count() == 0  # stale rows replaced
 
 
+def test_stream_upsert_publish_fault_keeps_table(spark, tmp_path, monkeypatch):
+    """A micro-batch whose publish fails after the live table was retired
+    fails the query and leaves the previous table readable in full."""
+    import pytest
+
+    from tests.test_sinks import _fail_publish
+
+    src = str(tmp_path / "src")
+    target = str(tmp_path / "target")
+    ev = _events_subset(spark, 40).select("event_id", "ts", "value")
+    ev.write.parquet(src)
+    seeded = ev.limit(20).withColumn("value", F.lit(-1.0))
+    seeded.write.parquet(target)
+    want = sorted(tuple(r) for r in spark.read.parquet(target).collect())
+
+    _fail_publish(monkeypatch, "__staging")
+    q = stream_upsert_parquet(
+        read_stream_parquet(spark, src, ev.schema), target, str(tmp_path / "ckpt"),
+        "event_id", "ts",
+    )
+    with pytest.raises(Exception, match="injected fault"):
+        q.awaitTermination(120)
+    monkeypatch.undo()
+    assert sorted(tuple(r) for r in spark.read.parquet(target).collect()) == want
+    assert not (tmp_path / "target__retired").exists()
+
+
 def test_stream_dedup_collapses_replays(spark, tmp_path):
     """At-least-once delivery: events replayed verbatim collapse to exactly
     one row per key; output matches batch dropDuplicates on the same data."""
