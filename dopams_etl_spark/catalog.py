@@ -12,10 +12,13 @@ predicate pushdown; schema evolution is reader-side schema union
 from __future__ import annotations
 
 import os
+import threading
 import weakref
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+
+from dopams_etl_spark.partitioning import _NPART_CACHE
 
 DEFAULT_SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
@@ -56,6 +59,9 @@ BROADCAST_TABLES = frozenset({"region", "nation"})
 _TABLE_CACHE: "weakref.WeakKeyDictionary[SparkSession, dict[tuple[str, str], DataFrame]]" = (
     weakref.WeakKeyDictionary()
 )
+# Guards iterating _TABLE_CACHE against a session added concurrently:
+# ``forget_path`` runs on ``gold.refresh_gold``'s pool threads.
+_TABLE_CACHE_LOCK = threading.Lock()
 
 
 def _norm_path(path: str) -> str:
@@ -63,10 +69,15 @@ def _norm_path(path: str) -> str:
 
 
 def forget_path(path: str) -> None:
-    """Drop every session's memoized ``load_table`` read of ``path``; call
-    after replacing the files under it."""
+    """Drop every session's memoized ``load_table`` read of ``path`` and
+    the partition-probe memo (which cannot tell which entries read
+    ``path``); call after replacing the files under it. Safe to call from
+    several threads at once, and alongside ``load_table``."""
+    _NPART_CACHE.clear()
     target = _norm_path(path)
-    for per_session in list(_TABLE_CACHE.values()):
+    with _TABLE_CACHE_LOCK:
+        sessions = list(_TABLE_CACHE.values())
+    for per_session in sessions:
         for sf_dir, name in list(per_session):
             if _norm_path(f"{sf_dir}/{name}.parquet") == target:
                 per_session.pop((sf_dir, name), None)
@@ -96,7 +107,8 @@ def load_table(
     """
     if name not in TABLES:
         raise KeyError(f"unknown table {name!r}; catalog has {TABLES}")
-    per_session = _TABLE_CACHE.setdefault(spark, {})
+    with _TABLE_CACHE_LOCK:
+        per_session = _TABLE_CACHE.setdefault(spark, {})
     cached = per_session.get((sf_dir, name))
     if cached is not None:
         return cached

@@ -14,8 +14,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from dopams_etl_spark.catalog import forget_path
-from dopams_etl_spark.sinks import hadoop_fs_path, restore_retired, swap_staged
+from dopams_etl_spark.sinks import hadoop_fs_path, publish_parquet, restore_retired
 
 GOLD_PIPELINES = (
     "firs_mv",
@@ -41,15 +40,16 @@ def refresh_gold(
     out_dir: str,
     names: tuple[str, ...] = GOLD_PIPELINES,
 ) -> dict[str, int]:
-    """S13: recompute each gold pipeline and overwrite its parquet table
-    (partitioned per ``GOLD_PARTITIONING``). Returns name → row count (the
-    reference's refresh logging analog), in ``names`` order. Duplicate
-    names collapse (the master dedups repeated refresh steps).
+    """S13: recompute each gold pipeline and replace its parquet table
+    (partitioned per ``GOLD_PARTITIONING``) through ``sinks.publish_parquet``,
+    so a failed write leaves the previous table readable. Returns name →
+    row count (the reference's refresh logging analog), in ``names``
+    order. Duplicate names collapse (the master dedups repeated refresh
+    steps).
 
     The MVs refresh concurrently: each plan is built on the calling thread,
-    in order (the ``catalog.load_table`` and partition-probe memos stay
-    single-threaded), and its write runs on a pool thread while the next
-    plan builds. AQE coalesces an MV's late stages to a task or two, so one
+    in order, and its write runs on a pool thread while the next plan
+    builds. AQE coalesces an MV's late stages to a task or two, so one
     MV at a time leaves most cores idle. The pool threads inherit the
     caller's job group, description and tags. The call returns, or raises
     the first failure in ``names`` order, only once every submitted write
@@ -70,17 +70,17 @@ def refresh_gold(
             # job — ONE pass per MV instead of write + re-read + count.
             obs = Observation(f"gold_refresh_{name}")
             df = qs[name](spark, sf_dir).observe(obs, F.count(F.lit(1)).alias("rows"))
-            writer = df.write.mode("overwrite")
+            writer = df.write
             parts = GOLD_PARTITIONING.get(name)
             if parts:
                 writer = writer.partitionBy(*parts)
             write = inheritable_thread_target(spark)(_write_observed)
-            writes[name] = pool.submit(write, writer, f"{out_dir}/{name}", obs)
+            writes[name] = pool.submit(write, spark, writer, f"{out_dir}/{name}", obs)
     return {name: fut.result() for name, fut in writes.items()}
 
 
-def _write_observed(writer, path: str, obs) -> int:
-    writer.parquet(path)
+def _write_observed(spark: SparkSession, writer, path: str, obs) -> int:
+    publish_parquet(spark, writer, path)
     return obs.get["rows"]
 
 
@@ -145,11 +145,10 @@ def compact_table(
     ``target_file_bytes`` using ``maxRecordsPerFile`` derived from the
     measured bytes-per-row (no fixed repartition count to outgrow — the
     writer splits per file, and ``partition_cols`` are preserved so
-    pruning still works). Staged rewrite (write to ``<path>.compact``,
-    then ``sinks.swap_staged``) through the Hadoop FS API, so a failed or
-    killed compaction never loses the table, on local disk, HDFS or S3
-    alike — the parquet analog of the reference's transactional refresh.
-    The ``catalog.load_table`` memo of ``path`` is dropped after the swap.
+    pruning still works). Staged rewrite (``sinks.publish_parquet``)
+    through the Hadoop FS API, so a failed or killed compaction never
+    loses the table, on local disk, HDFS or S3 alike — the parquet analog
+    of the reference's transactional refresh.
 
     Returns {"files_before", "files_after", "rows"}.
     """
@@ -160,17 +159,13 @@ def compact_table(
     before, size_bytes = _parquet_files(spark, path)
     per_row = max(size_bytes / max(rows, 1), 1.0)
     max_records = max(int(target_file_bytes / per_row), 1)
-    staged = path + ".compact"
     writer = (
         df.coalesce(max(1, min(32, int(size_bytes / target_file_bytes) + 1)))
-        .write.mode("overwrite")
-        .option("maxRecordsPerFile", max_records)
+        .write.option("maxRecordsPerFile", max_records)
     )
     if partition_cols:
         writer = writer.partitionBy(*partition_cols)
-    writer.parquet(staged)
-    swap_staged(spark, staged, path)
-    forget_path(path)
+    publish_parquet(spark, writer, path)
     return {"files_before": before, "files_after": _parquet_files(spark, path)[0], "rows": rows}
 
 

@@ -11,32 +11,42 @@ shuffle is never paid where it would hurt.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+import weakref
+
+from pyspark.sql import DataFrame, SparkSession
 
 # r16 (VERDICT item 6): the partition-count probe converts the analyzed
 # plan all the way to an RDD on the driver (analysis + optimization +
 # physical planning), once per call site per DataFrame BUILD — ~36 call
 # sites, and multi-arm queries probe the same subtree repeatedly
 # (ann_cost_recall_tradeoff probes 7×/build). The count is a pure
-# function of the analyzed plan, so memoize it on (session,
-# semanticHash): semanticHash needs only analysis, which the caller's
-# own schema accesses have already paid. A hash collision could at
+# function of the analyzed plan and the files it lists, so memoize it per
+# session on semanticHash: semanticHash needs only analysis, which the
+# caller's own schema accesses have already paid. Keyed WEAKLY by the
+# SparkSession object (like ``catalog._TABLE_CACHE``), so a collected
+# session's entries go with it and its id can't alias a new session's.
+# semanticHash is blind to a path's files (a file index hashes its root
+# paths), so ``catalog.forget_path`` — called by every writer that
+# replaces a table's files — clears the memo. A hash collision could at
 # worst return a stale COUNT — the decision then mis-picks a
 # partitioning, never a result (both branches are value-identical by
 # every call site's contract).
-_NPART_CACHE: dict[tuple[int, int], int] = {}
+_NPART_CACHE: "weakref.WeakKeyDictionary[SparkSession, dict[int, int]]" = (
+    weakref.WeakKeyDictionary()
+)
 _NPART_CACHE_MAX = 4096
 
 
 def probed_num_partitions(df: DataFrame) -> int:
     """Planned partition count of ``df``, memoized per (session, plan)."""
-    key = (id(df.sparkSession), df.semanticHash())
-    n = _NPART_CACHE.get(key)
+    per_session = _NPART_CACHE.setdefault(df.sparkSession, {})
+    key = df.semanticHash()
+    n = per_session.get(key)
     if n is None:
         n = df.rdd.getNumPartitions()
-        if len(_NPART_CACHE) >= _NPART_CACHE_MAX:
-            _NPART_CACHE.clear()
-        _NPART_CACHE[key] = n
+        if len(per_session) >= _NPART_CACHE_MAX:
+            per_session.clear()
+        per_session[key] = n
     return n
 
 

@@ -1265,15 +1265,13 @@ def entity_resolution_blocked(spark: SparkSession, sf_dir: str) -> DataFrame:
     # costs one exchange of the lightweight pair rows. Scoring is
     # per-row and the top-2 window is keyed by pt with a total ordering,
     # so results are partitioning-invariant.
-    # r16 (ADVICE): guarded like ensure_parallelism — only fires when the
+    # r16 (ADVICE): guarded by ensure_parallelism — only fires when the
     # pair table is UNDER-parallel; at real scale, where pairs_t already
     # has >= defaultParallelism partitions, the unconditional form would
     # pay an exchange for nothing (or REDUCE the scoring parallelism).
-    from dopams_etl_spark.partitioning import probed_num_partitions
+    from dopams_etl_spark.partitioning import ensure_parallelism
 
-    _dp = spark.sparkContext.defaultParallelism
-    if probed_num_partitions(pairs_t) < _dp:
-        pairs_t = pairs_t.repartition(_dp)
+    pairs_t = ensure_parallelism(pairs_t)
     scored_t = score_pairs(pairs_t, same_ps=F.col("par_a") == F.col("par_b"))
     w2 = Window.partitionBy("pt").orderBy(
         F.col("score").desc(), F.col("min1_canon").asc()

@@ -17,7 +17,7 @@ from __future__ import annotations
 
 from collections.abc import Sequence
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, DataFrameWriter, SparkSession
 
 from dopams_etl_spark.catalog import forget_path
 from dopams_etl_spark.operators.merge import upsert_latest_wins
@@ -80,6 +80,27 @@ def swap_staged(spark: SparkSession, staged: str, path: str) -> None:
         fs.rename(retired, live)  # roll back
         raise
     fs.delete(retired, True)
+
+
+def publish_parquet(spark: SparkSession, writer: DataFrameWriter, path: str) -> None:
+    """Write ``writer``'s parquet table to ``path`` without ever leaving
+    ``path`` unreadable: finish any cut swap (``restore_retired``), write
+    ``<path>__staging`` in full, then ``swap_staged`` it over the live table,
+    or rename it into place when there is none yet. A failed write leaves
+    the previous table (or no table) behind, never an empty directory.
+    Drops the ``load_table`` and partition-probe memos of ``path`` last.
+    Holds no state of its own, so concurrent calls for distinct paths are
+    safe (``gold.refresh_gold`` runs one per pool thread)."""
+    path = path.rstrip("/")
+    restore_retired(spark, path)
+    staging = f"{path}__staging"
+    writer.mode("overwrite").parquet(staging)
+    fs, live = hadoop_fs_path(spark, path)
+    if fs.exists(live):
+        swap_staged(spark, staging, path)
+    elif not fs.rename(hadoop_fs_path(spark, staging)[1], live):
+        raise OSError(f"could not publish {staging}")
+    forget_path(path)
 
 
 class KeyedTableSink:
@@ -147,11 +168,10 @@ class KeyedTableSink:
         deduped = upsert_latest_wins(
             df.limit(0), df, self.keys, self.version_col
         )
-        writer = deduped.write.mode("overwrite")
         if self.fmt == "delta":
-            writer.format("delta").save(self.path)
+            deduped.write.mode("overwrite").format("delta").save(self.path)
         else:
-            writer.parquet(self.path)
+            publish_parquet(self.spark, deduped.write, self.path)
 
     def _delta_merge(self, incoming: DataFrame) -> None:
         """True MERGE INTO: update-when-newer-or-equal (I4 guard),
@@ -170,11 +190,8 @@ class KeyedTableSink:
         )
 
     def _parquet_merge(self, incoming: DataFrame) -> None:
-        """Fallback: merge into a staging dir, then ``swap_staged`` it in.
-        The staged result is fully written before the live path is touched,
-        so readers never see a partial table (the merge reads the files the
-        write replaces, so it cannot overwrite in place)."""
+        """Fallback: merge into a staging dir, then swap it in
+        (``publish_parquet``). The merge reads the files the write replaces,
+        so it cannot overwrite in place."""
         merged = upsert_latest_wins(self.read(), incoming, self.keys, self.version_col)
-        staging = f"{self.path}__staging"
-        merged.write.mode("overwrite").parquet(staging)
-        swap_staged(self.spark, staging, self.path)
+        publish_parquet(self.spark, merged.write, self.path)

@@ -72,3 +72,38 @@ def test_table_pks_unique_on_driver_fixture(spark):
         total = df.count()
         distinct = df.select(pk).distinct().count()
         assert total == distinct > 0, (name, pk, total, distinct)
+
+
+def test_forget_path_runs_alongside_load_table(spark):
+    """``forget_path`` runs on ``gold.refresh_gold``'s pool threads while
+    the caller keeps reading tables, possibly from new sessions: the
+    concurrent calls raise nothing."""
+    import sys
+    import threading
+
+    from dopams_etl_spark.catalog import forget_path
+
+    errors, stop = [], threading.Event()
+
+    def forget():
+        try:
+            while not stop.is_set():
+                forget_path(f"{SF}/region.parquet")
+        except Exception as e:  # noqa: BLE001 - reported by the assert below
+            errors.append(e)
+
+    threads = [threading.Thread(target=forget) for _ in range(6)]
+    prev = sys.getswitchinterval()
+    sys.setswitchinterval(1e-6)
+    try:
+        for t in threads:
+            t.start()
+        for _ in range(12):
+            load_table(spark.newSession(), "nation", SF)
+    finally:
+        stop.set()
+        for t in threads:
+            t.join(timeout=30)
+        sys.setswitchinterval(prev)
+    assert not any(t.is_alive() for t in threads)
+    assert errors == []

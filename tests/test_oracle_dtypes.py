@@ -85,7 +85,7 @@ def _spark_family(dt) -> str:
     return "other"
 
 
-def test_numeric_family_parity(duck, spark):
+def test_numeric_family_parity(duck, registry_plans):
     """The driver hashes raw cell reprs, so a Spark int64 column against
     a DuckDB DOUBLE (or HUGEINT → float64-bridged) column mismatches on
     EVERY row (``3`` vs ``3.0``) even when values are identical — the
@@ -94,7 +94,7 @@ def test_numeric_family_parity(duck, spark):
     oracle outputs, and int/float/bool family agreement per column."""
     offenders = {}
     oracles = catalog.oracle_sql()
-    for name, fn in catalog.queries().items():
+    for name, plan in registry_plans.items():
         sql = oracles.get(name)
         if sql is None:
             continue
@@ -104,7 +104,7 @@ def test_numeric_family_parity(duck, spark):
             for r in desc.itertuples()
         }
         bad = []
-        for f in fn(spark, SF).schema.fields:
+        for f in plan.schema.fields:
             df_fam = duck_fams.get(f.name)
             sp_fam = _spark_family(f.dataType)
             if df_fam == "hugeint":
@@ -119,17 +119,13 @@ def test_numeric_family_parity(duck, spark):
     assert not offenders, f"numeric-family mismatches: {offenders}"
 
 
-def test_no_decimal_spark_outputs(spark):
+def test_no_decimal_spark_outputs(registry_plans):
     """Compile every registered Spark query's schema: no output column
     may be DecimalType — toPandas would surface Decimal objects that
     hash differently from the oracle's float64 bridge."""
     offenders = {}
-    for name, fn in catalog.queries().items():
-        dec = [
-            f.name
-            for f in fn(spark, SF).schema.fields
-            if isinstance(f.dataType, DecimalType)
-        ]
+    for name, plan in registry_plans.items():
+        dec = [f.name for f in plan.schema.fields if isinstance(f.dataType, DecimalType)]
         if dec:
             offenders[name] = dec
     assert not offenders, f"DecimalType Spark outputs: {offenders}"

@@ -7,10 +7,6 @@ an accidental nested-loop join fails CI here, before any bench regression.
 Plan compilation only; nothing executes.
 """
 
-from dopams_etl_spark.plans import catalog
-
-SF = "/root/testdata/sf0.001"
-
 # Nested-loop joins that are deliberate and bounded:
 # - cosine_topk_embeddings: the documented EXACT brute-force baseline —
 #   corpus is broadcast and size-gated (operators/similarity.py); the scale
@@ -68,12 +64,6 @@ BNLJ_ALLOWED = {
 }
 
 
-def _plans(spark):
-    for name, fn in catalog.queries().items():
-        df = fn(spark, SF)
-        yield name, df._jdf.queryExecution().executedPlan().toString()
-
-
 def _scalar_cross_joins(plan_str: str) -> int:
     """Count BNLJ nodes whose subtree contains a GLOBAL aggregate
     (``keys=[]`` → exactly one row): the canonical scalar-broadcast
@@ -96,16 +86,16 @@ def _scalar_cross_joins(plan_str: str) -> int:
     return n
 
 
-def test_no_cartesian_products_anywhere(spark):
-    offenders = [n for n, plan in _plans(spark) if "CartesianProduct" in plan]
+def test_no_cartesian_products_anywhere(registry_plans):
+    offenders = [n for n, p in registry_plans.items() if "CartesianProduct" in p.executed]
     assert not offenders, f"unbounded cartesian in: {offenders}"
 
 
-def test_nested_loop_joins_only_where_intended(spark):
+def test_nested_loop_joins_only_where_intended(registry_plans):
     offenders = [
         n
-        for n, plan in _plans(spark)
-        if plan.count("BroadcastNestedLoopJoin") > _scalar_cross_joins(plan)
+        for n, p in registry_plans.items()
+        if p.executed.count("BroadcastNestedLoopJoin") > _scalar_cross_joins(p.executed)
         and n not in BNLJ_ALLOWED
     ]
     assert not offenders, f"unplanned nested-loop join in: {offenders}"
@@ -151,27 +141,22 @@ def _unbounded_fact_hints(plan_str: str) -> list[str]:
     return bad
 
 
-def test_no_explicit_broadcast_of_fact_tables(spark):
+def test_no_explicit_broadcast_of_fact_tables(registry_plans):
     """VERDICT r2 'What's wrong #2': explicit F.broadcast on SF-scaling
     tables is the 100× scale-killer. Every query's analyzed plan must keep
     broadcast hints off unreduced fact-table scans."""
     offenders = {}
-    for name, fn in catalog.queries().items():
-        plan = fn(spark, SF)._jdf.queryExecution().analyzed().toString()
-        bad = _unbounded_fact_hints(plan)
+    for name, p in registry_plans.items():
+        bad = _unbounded_fact_hints(p.analyzed)
         if bad:
             offenders[name] = bad
     assert not offenders, f"broadcast hint on SF-scaling table: {offenders}"
 
 
-def test_allowlist_is_tight(spark):
+def test_allowlist_is_tight(registry_plans):
     """The allowlist shrinks if a listed query stops needing its BNLJ."""
-    qs = catalog.queries()
     still = {
-        n
-        for n in BNLJ_ALLOWED
-        if "BroadcastNestedLoopJoin"
-        in qs[n](spark, SF)._jdf.queryExecution().executedPlan().toString()
+        n for n in BNLJ_ALLOWED if "BroadcastNestedLoopJoin" in registry_plans[n].executed
     }
     assert still == BNLJ_ALLOWED, (
         f"allowlist stale: {BNLJ_ALLOWED - still} no longer plan a BNLJ — remove them"

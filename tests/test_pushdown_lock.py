@@ -9,7 +9,7 @@ query family whose plan carries scan-level pruning; breaking any single
 pushdown (e.g. wrapping a filtered column in a cast) drops the count
 below its floor and fails here.
 
-Counts extracted with ``tools.plan_audit.pushdown_tuple`` — planning
+Counts extracted with ``tools.plan_audit.pushdown_counts`` — planning
 time only (pushdown is decided at planning, so the un-executed plan
 prints identical scan filter lists), truncation-proof (raises
 maxMetadataStringLength; bracket-depth-aware capture so In(col, [..])
@@ -28,11 +28,9 @@ from __future__ import annotations
 
 import pytest
 
-from tools.plan_audit import pushdown_tuple
+from tools.plan_audit import pushdown_counts
 
 from _pushdown_floors import GENERATED_FLOORS
-
-SF = "/root/testdata/sf0.001"
 
 # query -> (min scans with PushedFilters, min scans with PartitionFilters,
 #           min TOTAL pushed predicates, min TOTAL partition predicates)
@@ -90,17 +88,9 @@ FLOORS: dict[str, tuple[int, int, int, int]] = {
 }
 
 
-@pytest.fixture(scope="module")
-def audited(spark):
-    from dopams_etl_spark.plans import catalog
-
-    qs = catalog.queries()
-    return {name: pushdown_tuple(qs[name](spark, SF)) for name in FLOORS}
-
-
 @pytest.mark.parametrize("name", sorted(FLOORS))
-def test_pushdown_floor(name, audited):
-    pushed, partf, npred, npart = audited[name]
+def test_pushdown_floor(name, registry_plans):
+    pushed, partf, npred, npart = pushdown_counts(registry_plans[name].executed)
     min_pushed, min_partf, min_npred, min_npart = FLOORS[name]
     assert pushed >= min_pushed, (
         f"{name}: {pushed} scans carry PushedFilters, floor is "

@@ -124,7 +124,7 @@ def test_compact_table_publish_fault_keeps_table(spark, tmp_path, monkeypatch):
 
     path = str(tmp_path / "frag")
     want = _frag_table(spark, path)
-    _fail_publish(monkeypatch, ".compact")
+    _fail_publish(monkeypatch, "__staging")
     with pytest.raises(OSError, match="injected fault"):
         compact_table(spark, path, partition_cols=("yr",))
     assert _rows(spark, path) == want
@@ -164,3 +164,21 @@ def test_upsert_publish_fault_keeps_table(spark, tmp_path, monkeypatch):
     s.upsert(_batch(spark, [(3, 1, "c")]))
     got = {(r["id"], r["val"]) for r in s.read().collect()}
     assert got == {(1, "a"), (2, "b"), (3, "c")}
+
+
+def _failing_batch(spark):
+    x = F.when(F.col("id") >= 0, F.raise_error(F.lit("batch fails at execution")))
+    return spark.range(3).select(
+        F.col("id"), F.lit(1).cast("long").alias("version"), x.cast("string").alias("val")
+    )
+
+
+def test_failed_first_upsert_does_not_wedge_the_table(spark, tmp_path):
+    """A first write that fails leaves no table (not an empty directory
+    every later upsert would fail to read), so the next upsert succeeds."""
+    s = _sink(spark, tmp_path)
+    with pytest.raises(Exception, match="batch fails at execution"):
+        s.upsert(_failing_batch(spark))
+    assert not s.exists()
+    s.upsert(_batch(spark, [(1, 1, "a")]))
+    assert [(r["id"], r["val"]) for r in s.read().collect()] == [(1, "a")]

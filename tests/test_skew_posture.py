@@ -104,10 +104,28 @@ def test_partition_probe_memoizes_per_plan(spark, skewed):
 
     _NPART_CACHE.clear()
     assert probed_num_partitions(skewed) == 1
-    assert len(_NPART_CACHE) == 1
+    memo = _NPART_CACHE[skewed.sparkSession]
+    assert len(memo) == 1
     # semantically identical plan -> cache hit, no second RDD conversion
     again = skewed.sparkSession.range(10)  # unrelated df must not collide
     assert probed_num_partitions(skewed) == 1
-    assert len(_NPART_CACHE) == 1
+    assert len(memo) == 1
     assert probed_num_partitions(again.select((F.col("id") + 1).alias("x"))) >= 1
-    assert len(_NPART_CACHE) == 2
+    assert len(memo) == 2
+
+
+def test_partition_probe_sees_a_rewritten_table(spark, tmp_path):
+    """A rewrite keeps the table's path, so its reloaded plan has the
+    same semanticHash; the writer's ``forget_path`` must drop the probe
+    memo, or the probe keeps reporting the old file count."""
+    from dopams_etl_spark.catalog import load_table
+    from dopams_etl_spark.gold import compact_table
+    from dopams_etl_spark.partitioning import probed_num_partitions
+
+    path = str(tmp_path / "region.parquet")
+    spark.range(400).coalesce(1).write.parquet(path)
+    assert probed_num_partitions(load_table(spark, "region", str(tmp_path))) == 1
+    stats = compact_table(spark, path, target_file_bytes=512)
+    assert stats["files_after"] > 1
+    reloaded = load_table(spark, "region", str(tmp_path))
+    assert probed_num_partitions(reloaded) == reloaded.rdd.getNumPartitions() > 1

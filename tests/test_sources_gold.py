@@ -275,6 +275,27 @@ def test_gold_refresh_execution_failure_waits_for_other_writes(spark, tmp_path, 
     assert spark.read.parquet(f"{out}/accuseds_mv").count() == 6000
 
 
+def test_gold_refresh_write_failure_keeps_the_previous_table(spark, tmp_path, monkeypatch):
+    """A refresh whose write fails leaves the MV's previous table in
+    place and readable (the interactive lookups read it), not an empty
+    directory."""
+    from dopams_etl_spark.gold import refresh_gold
+
+    fail = {"on": False}
+
+    def toy(spark, sf_dir):
+        x = F.when(F.lit(fail["on"]) & (F.col("id") > 5), F.raise_error(F.lit("boom at execution")))
+        return spark.range(10).select(x.otherwise(F.col("id")).alias("x"))
+
+    _registry_with(monkeypatch, {"toy_mv": toy})
+    out = str(tmp_path / "gold")
+    assert refresh_gold(spark, SF, out, ("toy_mv",)) == {"toy_mv": 10}
+    fail["on"] = True
+    with pytest.raises(Exception, match="boom at execution"):
+        refresh_gold(spark, SF, out, ("toy_mv",))
+    assert spark.read.parquet(f"{out}/toy_mv").count() == 10
+
+
 def test_gold_refresh_build_failure_leaves_no_running_write(spark, tmp_path):
     """An unknown name fails at build time, after earlier MVs' writes were
     submitted: the call raises once those writes are done."""

@@ -1,13 +1,18 @@
-"""Interleaved A/B timer: min-of-N warm noop-sink seconds for named queries,
-run against THIS tree (whichever repo root the script is invoked from).
+"""Per-query timer over the noop sink, run against THIS tree (whichever
+repo root the script is invoked from).
 
 Usage:
-    python tools/ab_time.py lsh_topk_embeddings minhash_lsh_pairs
-    AB_RUNS=5 AB_SF_DIR=/root/testdata/sf0.1 python tools/ab_time.py q1 ...
+    python tools/ab_time.py                          # every registered query
+    python tools/ab_time.py q1_pricing_summary firs_mv
+    AB_RUNS=5 AB_SF_DIR=/root/testdata/sf0.1 python tools/ab_time.py ...
 
-Prints one JSON line {"root": ..., "queries": {name: sec}}. Pair it with a
-worktree of the comparison commit and alternate invocations so both trees
-see the same ambient conditions (this box drifts ±20% across hours).
+Per query it prints one JSON line: ``build_s`` (DataFrame construction),
+``first_s`` (first execution: optimization + codegen + run) and
+``warm_s`` (min of ``AB_RUNS`` further executions), or ``error`` for a
+query that raises (the sweep goes on). A last line carries the repo
+root, the query count and the summed ``warm_s``. For an A/B, run it from
+a checkout of each commit and alternate invocations so both trees see
+the same ambient conditions (one box drifts ±20% across hours).
 """
 
 from __future__ import annotations
@@ -24,6 +29,12 @@ SF_DIR = os.environ.get("AB_SF_DIR", "/root/testdata/sf0.1")
 RUNS = int(os.environ.get("AB_RUNS", "5"))
 
 
+def _noop_write_s(df) -> float:
+    t0 = time.perf_counter()
+    df.write.format("noop").mode("overwrite").save()
+    return time.perf_counter() - t0
+
+
 def main() -> None:
     from dopams_etl_spark.plans import catalog
     from dopams_etl_spark.session import get_spark
@@ -31,18 +42,24 @@ def main() -> None:
     spark = get_spark("ab-time")
     spark.sparkContext.setLogLevel("ERROR")
     qs = catalog.queries()
-    names = sys.argv[1:]
-    out: dict[str, float] = {}
-    for name in names:
-        df = qs[name](spark, SF_DIR)
-        df.write.format("noop").mode("overwrite").save()  # warm (plan+codegen)
-        best = float("inf")
-        for _ in range(RUNS):
-            t0 = time.time()
-            df.write.format("noop").mode("overwrite").save()
-            best = min(best, time.time() - t0)
-        out[name] = round(best, 3)
-    print(json.dumps({"root": ROOT, "queries": out}))
+    warm: dict[str, float] = {}
+    for name in sys.argv[1:] or list(qs):
+        spark.sparkContext.setJobDescription(f"ab_time: {name}")
+        try:
+            t0 = time.perf_counter()
+            df = qs[name](spark, SF_DIR)
+            build_s = time.perf_counter() - t0
+            first_s = _noop_write_s(df)
+            warm[name] = min(_noop_write_s(df) for _ in range(RUNS))
+            print(json.dumps({"q": name, "build_s": round(build_s, 3),
+                              "first_s": round(first_s, 3),
+                              "warm_s": round(warm[name], 3)}), flush=True)
+        except Exception as e:  # keep sweeping; a broken query is its own finding
+            print(json.dumps({"q": name, "error": f"{type(e).__name__}: {e}"}), flush=True)
+        finally:
+            spark.sparkContext.setJobDescription(None)
+    print(json.dumps({"root": ROOT, "n": len(warm),
+                      "total_warm_s": round(sum(warm.values()), 3)}))
 
 
 if __name__ == "__main__":

@@ -333,24 +333,35 @@ def pushed_predicate_totals(plan: str) -> tuple[int, int]:
     )
 
 
-def pushdown_tuple(df) -> tuple[int, int, int, int]:
-    """(scans w/ PushedFilters, scans w/ PartitionFilters, total pushed
-    predicates, total partition predicates) for a DataFrame — WITHOUT
-    executing it. Pushdown is decided at planning time, so the
-    un-executed physical plan (AQE initial tree) prints the identical
-    FileScan PushedFilters/PartitionFilters lists as the final plan;
-    skipping ``collect()`` makes a whole-registry sweep planning-cost
-    only. Temporarily raises maxMetadataStringLength so long filter
-    lists don't truncate (the r8 counting bug class)."""
+def executed_plan(df) -> str:
+    """The un-executed physical plan of ``df`` as a string, built while
+    maxMetadataStringLength is raised so long filter lists don't truncate
+    (the r8 counting bug class). The limit is fixed when the plan is
+    built, not when it prints, so this must be the first call to plan
+    ``df``'s QueryExecution. Pushdown is decided at planning time, so the
+    un-executed plan (AQE initial tree) prints the identical FileScan
+    PushedFilters/PartitionFilters lists as the final one; skipping
+    ``collect()`` makes a whole-registry sweep planning-cost only."""
     spark = df.sparkSession
     prev = spark.conf.get("spark.sql.maxMetadataStringLength", "100")
     spark.conf.set("spark.sql.maxMetadataStringLength", "1000")
     try:
-        plan = df._jdf.queryExecution().executedPlan().toString()
+        return df._jdf.queryExecution().executedPlan().toString()
     finally:
         spark.conf.set("spark.sql.maxMetadataStringLength", prev)
+
+
+def pushdown_counts(plan: str) -> tuple[int, int, int, int]:
+    """(scans w/ PushedFilters, scans w/ PartitionFilters, total pushed
+    predicates, total partition predicates) from an ``executed_plan``
+    string."""
     plan = plan.split("== Initial Plan ==")[0]
     return scan_pushdown_counts(plan) + pushed_predicate_totals(plan)
+
+
+def pushdown_tuple(df) -> tuple[int, int, int, int]:
+    """``pushdown_counts`` of ``df``'s ``executed_plan``."""
+    return pushdown_counts(executed_plan(df))
 
 
 def audit_one(name: str, df) -> dict:
