@@ -36,14 +36,6 @@ TABLES = (
     "embeddings",
 )
 
-# Fixed-cardinality dimensions (region=5, nation=25 at ANY scale factor):
-# the only tables safe to broadcast-hint explicitly. customer/part/supplier/
-# orders all grow linearly with SF — at 100 TB they are billions of rows, and
-# an explicit hint would bypass AQE's size check and OOM the executors; their
-# joins stay plain so AQE picks broadcast-vs-shuffle from measured size.
-BROADCAST_TABLES = frozenset({"region", "nation"})
-
-
 # session -> {(sf_dir, table): DataFrame}. ``spark.read.parquet`` does a
 # file listing + footer/schema read EVERY call (~70 ms per table); across
 # a 247-query catalog that re-reads identical metadata thousands of

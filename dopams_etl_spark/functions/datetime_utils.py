@@ -10,9 +10,6 @@ from __future__ import annotations
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
-IST_OFFSET_HOURS = 5.5
-
-
 def _c(col: Column | str) -> Column:
     return F.col(col) if isinstance(col, str) else col
 

@@ -62,8 +62,18 @@ def md5_bucket32(key: Column) -> Column:
     (salted modulus), ``quality.assign_split`` (cumulative-fraction
     thresholds), ``stratified_kfold_assign`` (label-salted fold),
     ``bootstrap_mean_ci`` (replicate-salted uniform)."""
-    return F.conv(F.substring(F.md5(key.cast("string")), 1, 8), 16, 10).cast(
-        "bigint"
+    return md5_words(F.md5(key.cast("string")))[0]
+
+
+def md5_words(hex_digest: Column) -> tuple[Column, Column]:
+    """The two leading 32-bit words of an md5 hex string, each a BIGINT in
+    [0, 2³²): hex chars 1–8 and 9–16. The one place the sketches split an
+    md5 (MinHash's universal family, the Bloom filter's double hashing,
+    SimHash's 64 token bits, hashed-bucket weights); callers compute the
+    md5 once and split it here, and any engine with a standard md5
+    reproduces both words."""
+    return tuple(
+        F.conv(F.substring(hex_digest, start, 8), 16, 10).cast("bigint") for start in (1, 9)
     )
 
 

@@ -16,6 +16,8 @@ from __future__ import annotations
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
+from dopams_etl_spark.functions.ids import md5_words
+
 # Tiny per-language stopword seeds for the heuristic language-ID.
 STOPWORDS: dict[str, tuple[str, ...]] = {
     "en": ("the", "and", "of", "to", "a", "in", "is", "it", "that", "for"),
@@ -273,9 +275,7 @@ def hashed_model_score(col: Column | str, buckets: int = HASHED_MODEL_BUCKETS) -
             toks,
             lambda w: F.element_at(
                 warr,
-                (F.conv(F.substring(F.md5(w), 1, 8), 16, 10).cast("long") % buckets + 1).cast(
-                    "int"
-                ),
+                (md5_words(F.md5(w))[0] % buckets + 1).cast("int"),
             ),
         ),
         F.lit(0.0),

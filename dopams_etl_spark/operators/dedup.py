@@ -28,9 +28,10 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from dopams_etl_spark.caching import persist_bounded
+from dopams_etl_spark.functions.ids import md5_words
 from dopams_etl_spark.functions.textfns import doc_fingerprint, tokens, word_shingles
 
-# Universal-hash family for hash_fn="md5u": member i maps the shingle's
+# MinHash's universal-hash family: member i maps the shingle's
 # md5-derived words (a, b) to (P[i]·a + Q[i]·b) mod M, M = 2³¹−1 (Mersenne
 # prime). Coefficients are seeded from md5 of a fixed tag so any engine (or
 # a SQL oracle) can regenerate — or simply inline — the identical family.
@@ -61,30 +62,24 @@ def exact_dedup(df: DataFrame, text_col: str, id_col: str) -> DataFrame:
 
 
 def minhash_signature(
-    df: DataFrame, id_col: str, text_col: str, num_hashes: int = 32, shingle_n: int = 3,
-    hash_fn: str = "murmur3",
+    df: DataFrame, id_col: str, text_col: str, num_hashes: int = 32, shingle_n: int = 3
 ) -> DataFrame:
-    """(id, minhash array) — per hash family member, the min hash (family
-    index mixed in as a seed) over word shingles.
+    """(id, minhash array) — per hash family member, the min hash over
+    word shingles.
 
-    ``hash_fn="murmur3"`` (default): JVM ``F.hash`` ints — the fastest
-    path. ``hash_fn="md5u"``: ONE ``md5(shingle)`` per shingle, split
-    into two 32-bit words (a, b) reduced mod M = 2³¹−1; member i is the
-    degree-1 universal hash (Pᵢ·a + Qᵢ·b) mod M with fixed
-    deterministically-seeded coefficients (``MINHASH_P``/``MINHASH_Q``) —
-    the datasketch-style "one strong hash, then a universal family"
-    construction. Per member the coefficients are independent, so member
-    agreements are the independent Bernoulli(J) trials the est-Jaccard
-    estimator assumes (a plain ``a + i·b`` family is NOT: its argmins are
-    confined to the lower convex hull of the (b, a) point set, ~log n
-    shingles). Products stay < 2⁶² so ANSI long arithmetic never
-    overflows, and the whole family is byte-identical in any engine with
-    a standard md5 (DuckDB, Postgres, Trino), which is what lets the
-    registered query carry a value-level SQL oracle instead of a
-    rows-only check, at ~1/32 the hashing cost of the per-member
-    ``hash_fn="md5"`` legacy scheme (min of the hex string
-    ``md5(shingle || '|' || i)``, kept for oracle-compat of older
-    persisted signatures).
+    ONE ``md5(shingle)`` per shingle, split into two 32-bit words (a, b)
+    reduced mod M = 2³¹−1; member i is the degree-1 universal hash
+    (Pᵢ·a + Qᵢ·b) mod M with fixed deterministically-seeded coefficients
+    (``MINHASH_P``/``MINHASH_Q``) — the datasketch-style "one strong hash,
+    then a universal family" construction. Per member the coefficients
+    are independent, so member agreements are the independent
+    Bernoulli(J) trials the est-Jaccard estimator assumes (a plain
+    ``a + i·b`` family is NOT: its argmins are confined to the lower
+    convex hull of the (b, a) point set, ~log n shingles). Products stay
+    < 2⁶² so ANSI long arithmetic never overflows, and the whole family
+    is byte-identical in any engine with a standard md5 (DuckDB,
+    Postgres, Trino), which is what lets the registered query carry a
+    value-level SQL oracle.
 
     Computed as explode(shingles) → groupBy(id) with one ``min`` per family
     member. The aggregate boundary matters twice over: (a) map-side partial
@@ -98,43 +93,28 @@ def minhash_signature(
     """
     from dopams_etl_spark.partitioning import ensure_parallelism
 
-    if hash_fn not in ("murmur3", "md5", "md5u"):
-        raise ValueError(f"unknown hash_fn {hash_fn!r}")
     if num_hashes > len(MINHASH_P):
         raise ValueError(f"num_hashes > {len(MINHASH_P)} needs more seeded coefficients")
     sh = ensure_parallelism(df, id_col).select(
         F.col(id_col).alias("id"), F.explode(word_shingles(text_col, shingle_n)).alias("sh")
     )
-    if hash_fn == "md5u":
-        # Materialize (a, b) as concrete columns BEFORE the aggregate so the
-        # md5 runs once per shingle, not once per family member.
-        ab = sh.select("id", F.md5("sh").alias("__m")).select(
-            "id",
-            (F.conv(F.substring("__m", 1, 8), 16, 10).cast("long") % MINHASH_MOD).alias("__a"),
-            (F.conv(F.substring("__m", 9, 8), 16, 10).cast("long") % MINHASH_MOD).alias("__b"),
-        )
-        members = [
-            F.min(
-                (
-                    (F.lit(MINHASH_P[i]) * F.col("__a")) % MINHASH_MOD
-                    + (F.lit(MINHASH_Q[i]) * F.col("__b")) % MINHASH_MOD
-                )
-                % MINHASH_MOD
-            ).alias(f"__h{i}")
-            for i in range(num_hashes)
-        ]
-        agg = ab.groupBy("id").agg(*members)
-        return agg.select(
-            "id", F.array(*[f"__h{i}" for i in range(num_hashes)]).alias("minhash")
-        )
-    if hash_fn == "md5":
-        members = [
-            F.min(F.md5(F.concat_ws("|", F.col("sh"), F.lit(str(i))))).alias(f"__h{i}")
-            for i in range(num_hashes)
-        ]
-    else:
-        members = [F.min(F.hash("sh", F.lit(i))).alias(f"__h{i}") for i in range(num_hashes)]
-    agg = sh.groupBy("id").agg(*members)
+    # Materialize (a, b) as concrete columns BEFORE the aggregate so the
+    # md5 runs once per shingle, not once per family member.
+    a, b = md5_words(F.col("__m"))
+    ab = sh.select("id", F.md5("sh").alias("__m")).select(
+        "id", (a % MINHASH_MOD).alias("__a"), (b % MINHASH_MOD).alias("__b")
+    )
+    members = [
+        F.min(
+            (
+                (F.lit(MINHASH_P[i]) * F.col("__a")) % MINHASH_MOD
+                + (F.lit(MINHASH_Q[i]) * F.col("__b")) % MINHASH_MOD
+            )
+            % MINHASH_MOD
+        ).alias(f"__h{i}")
+        for i in range(num_hashes)
+    ]
+    agg = ab.groupBy("id").agg(*members)
     return agg.select(
         "id", F.array(*[f"__h{i}" for i in range(num_hashes)]).alias("minhash")
     )
@@ -142,7 +122,7 @@ def minhash_signature(
 
 def lsh_candidate_pairs(
     df: DataFrame, id_col: str, text_col: str, num_hashes: int = 32, bands: int = 8,
-    shingle_n: int = 3, hash_fn: str = "murmur3",
+    shingle_n: int = 3,
 ) -> DataFrame:
     """MinHash-LSH near-dup candidates: band the signature, join within
     (band_id, band_hash) buckets. Returns (id_a, id_b, est_jaccard) with
@@ -156,7 +136,7 @@ def lsh_candidate_pairs(
     re-joined just for the deduplicated candidate pairs (a set orders of
     magnitude smaller than the corpus for any sane banding)."""
     rows_per_band = num_hashes // bands
-    sigs = minhash_signature(df, id_col, text_col, num_hashes, shingle_n, hash_fn)
+    sigs = minhash_signature(df, id_col, text_col, num_hashes, shingle_n)
     # One materialization, three consumers (banding + two pair-side
     # re-joins); without it Spark recomputes the shingle aggregate per
     # consumer (measured +0.6 s at sf0.1). persist — not localCheckpoint —
@@ -251,70 +231,38 @@ def ngram_jaccard_pairs(
     return jac.filter(F.col("jaccard") >= threshold).select("id_a", "id_b", "jaccard")
 
 
-def _hex_nibble(ch: Column) -> Column:
-    """Hex char → 0–15 (lowercase hex only — md5 output)."""
-    c = F.when(ch == "0", F.lit(0))
-    for i, h in enumerate("123456789abcdef", start=1):
-        c = c.when(ch == h, F.lit(i))
-    return c.cast("int")
-
-
-def _md5_vote_array(m: Column) -> Column:
-    """±1 vote per bit of a 64-bit hash derived from an md5 hex string:
-    bit b lives in hex char b//4 (1-based), nibble bit b%4 — char-major
-    order so any engine with a standard md5 reproduces the identical bit
-    stream from substr+strpos arithmetic."""
-    nibs = F.transform(
-        F.sequence(F.lit(1), F.lit(16)), lambda i: _hex_nibble(m.substr(i, F.lit(1)))
-    )
-    bits = F.flatten(
-        F.transform(
-            nibs,
-            lambda n: F.array(
-                n.bitwiseAND(F.lit(1)),
-                F.shiftright(n, 1).bitwiseAND(F.lit(1)),
-                F.shiftright(n, 2).bitwiseAND(F.lit(1)),
-                F.shiftright(n, 3).bitwiseAND(F.lit(1)),
-            ),
-        )
-    )
-    return F.transform(bits, lambda x: (x * 2 - 1).cast("long"))
-
-
-def simhash64(
-    df: DataFrame, text_col: str, out_col: str = "simhash", hash_fn: str = "xxhash64"
-) -> DataFrame:
+def simhash64(df: DataFrame, text_col: str, out_col: str = "simhash") -> DataFrame:
     """64-bit SimHash per document, fully JVM-side.
 
-    Per token: a 64-bit hash; per bit b: +1 if set else -1, accumulated
-    over tokens with ``aggregate``+``zip_with``; sign vector re-packed to
-    a long. ``hash_fn="xxhash64"`` (default) is the fast engine path;
-    ``hash_fn="md5"`` derives the 64 bits from the first 16 hex chars of
-    ``md5(token)`` so the signature replicates in any engine with a
-    standard md5 (the value-level-oracle path, same trick as
-    ``minhash_signature``).
+    Per distinct token: the leading 64 bits of ``md5(token)``, packed into
+    one long from its two 32-bit words; per bit b: +1 if set else -1,
+    accumulated over tokens with ``aggregate``+``zip_with``; sign vector
+    re-packed to a long. Bit b is hex char b//4, nibble bit b%4 (least
+    significant first) — char-major order, so any engine with a standard
+    md5 reproduces the identical signature from substr+strpos arithmetic
+    (the value-level-oracle path, same trick as ``minhash_signature``).
     """
-    if hash_fn not in ("xxhash64", "md5"):
-        raise ValueError(f"unknown hash_fn {hash_fn!r}")
     toks = F.array_distinct(tokens(text_col))
     zeros = F.array_repeat(F.lit(0).cast("long"), 64)
-    if hash_fn == "md5":
-        hashed = F.transform(toks, lambda t: F.md5(t))
-        votes = _md5_vote_array
-    else:
-        hashed = F.transform(toks, lambda t: F.xxhash64(t))
 
-        def votes(h: Column) -> Column:
-            # Shift amounts must be Python ints (PySpark's shiftright
-            # rejects a Column there): 64 extractions unrolled literally.
-            return F.array(
-                *[
-                    F.when(F.shiftright(h, b).bitwiseAND(F.lit(1)) == 1, F.lit(1))
-                    .otherwise(F.lit(-1))
-                    .cast("long")
-                    for b in range(64)
-                ]
-            )
+    def packed_md5(m: Column) -> Column:
+        hi, lo = md5_words(m)
+        return F.shiftleft(hi, 32).bitwiseOR(lo)
+
+    # Two passes so each token's md5 is computed once, not once per word.
+    hashed = F.transform(F.transform(toks, lambda t: F.md5(t)), packed_md5)
+
+    # Hex char j holds long bits 63−4j..60−4j, so bit b sits at shift
+    # 60 − 4·(b//4) + b%4. ``F.shiftright`` takes only a Python int shift;
+    # the SQL function takes a column, so one lambda serves all 64 bits
+    # (64 unrolled extractions build ~0.3 s slower per query).
+    shifts = F.array(*[F.lit(60 - 4 * (b // 4) + b % 4) for b in range(64)])
+
+    def votes(h: Column) -> Column:
+        return F.transform(
+            shifts,
+            lambda s: (F.call_function("shiftright", h, s).bitwiseAND(F.lit(1)) * 2 - 1),
+        )
 
     bit_votes = F.aggregate(
         hashed,
@@ -336,15 +284,14 @@ def simhash64(
 
 
 def simhash_near_dups(
-    df: DataFrame, id_col: str, text_col: str, max_hamming: int = 3,
-    hash_fn: str = "xxhash64",
+    df: DataFrame, id_col: str, text_col: str, max_hamming: int = 3
 ) -> DataFrame:
     """SimHash near-dup pairs: banded blocking (4×16-bit chunks — pairs within
     hamming ≤ 3 share at least one identical chunk by pigeonhole), then exact
     hamming via bit_count(xor)."""
     from dopams_etl_spark.partitioning import ensure_parallelism
 
-    sigs = simhash64(ensure_parallelism(df, id_col), text_col, hash_fn=hash_fn).select(
+    sigs = simhash64(ensure_parallelism(df, id_col), text_col).select(
         F.col(id_col).alias("id"), "simhash"
     )
     chunks = sigs.select(
@@ -397,7 +344,7 @@ def winnow_fingerprints(
 
     Hashes are md5 hex strings and the min is lexicographic, so any
     engine with a standard md5 reproduces the exact fingerprint set (same
-    value-level-oracle trick as ``minhash_signature(hash_fn="md5")``).
+    value-level-oracle trick as ``minhash_signature``).
 
     Plan shape: grams explode to (id, pos, hash) rows and the sliding min
     is a frame-bounded window aggregate (ROWS BETWEEN CURRENT AND w-1

@@ -22,8 +22,6 @@ from collections.abc import Sequence
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
-from dopams_etl_spark.operators.joins import latest_per_key
-
 
 def upsert_latest_wins(
     existing: DataFrame,
@@ -42,8 +40,6 @@ def upsert_latest_wins(
     e = existing.withColumn("__src", F.lit(0))
     i = incoming.withColumn("__src", F.lit(1))
     unioned = e.unionByName(i, allowMissingColumns=True)
-    from pyspark.sql import Window
-
     # Order: version desc nulls last, then incoming over existing, then tiebreak.
     order = [F.col(version_col).desc_nulls_last(), F.col("__src").desc()]
     if tiebreak is not None:

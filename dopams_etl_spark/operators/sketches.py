@@ -40,6 +40,8 @@ from collections.abc import Iterator
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from dopams_etl_spark.functions.ids import md5_words
+
 
 def _mg_candidates(df_keys: DataFrame, key: str, k: int) -> DataFrame:
     """Per-partition Misra-Gries summaries of capacity ``k`` over the
@@ -135,9 +137,7 @@ def _bloom_pos(col: "F.Column | str", m_bits: int, i: int) -> "F.Column":
     """Bit position of hash-family member ``i``: (h1 + i·h2) mod m, with
     (h1, h2) the two 32-bit words of md5(value). Products stay < 2^34 —
     no overflow under ANSI long arithmetic."""
-    h = F.md5(F.col(col) if isinstance(col, str) else col)
-    h1 = F.conv(F.substring(h, 1, 8), 16, 10).cast("long")
-    h2 = F.conv(F.substring(h, 9, 8), 16, 10).cast("long")
+    h1, h2 = md5_words(F.md5(F.col(col) if isinstance(col, str) else col))
     return (h1 + F.lit(i) * h2) % F.lit(m_bits)
 
 

@@ -2,15 +2,14 @@
 north-star training-data-pipeline surface) with DuckDB oracles where the
 computation is engine-portable.
 
-Every entry here is oracle-checked — including minhash and simhash,
-whose murmur3-based signatures initially had no DuckDB analog: the
-registered entries run md5-derived hash families DuckDB reproduces
-value-for-value (``minhash_lsh_pairs`` uses the ``md5u`` universal-hash
-family, ``simhash_dups`` the md5-nibble bit derivation), so
-``catalog.oracle_sql()`` returns real DuckDB SQL for the full registry;
-murmur3/xxhash64 remain the engine-internal scale paths. The hyperplane-LSH
-operators (lsh_topk, embedding near-dups) use seeded-numpy plane
-literals DuckDB reproduces bit-for-bit (``_lsh_bucket_sql``), and the
+Every entry here is oracle-checked — including minhash and simhash:
+both sketches derive their hashes from md5, which DuckDB reproduces
+value-for-value (MinHash a universal-hash family over each shingle's two
+md5 words, SimHash each token's 64 leading md5 bits), so
+``catalog.oracle_sql()`` returns real DuckDB SQL for the full registry.
+The hyperplane-LSH operators (lsh_topk, embedding near-dups) use
+seeded-numpy plane literals DuckDB reproduces bit-for-bit
+(``_lsh_bucket_sql``), and the
 approximate operators are additionally validated against their exact
 counterparts (n-gram Jaccard, brute-force cosine) in tests.
 """
@@ -20,6 +19,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from dopams_etl_spark.functions.ids import md5_bucket32, md5_words
 from dopams_etl_spark.functions.textfns import (
     bpe_token_count,
     hashed_model_weights,
@@ -340,16 +340,13 @@ def dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def minhash_lsh_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """MinHash+LSH candidate pairs — banded signature shuffle; validated
-    against exact n-gram Jaccard in tests/test_dedup.py. Runs the
-    ``hash_fn="md5u"`` family (ONE md5 per shingle, then a universal-hash
-    family mod 2³¹−1 with seeded coefficients) so the banded buckets AND
-    the est-Jaccard values replicate in DuckDB (value-level oracle; the
-    coefficient lists are inlined into the SQL) at ~1/32 the hashing cost
-    of a per-member md5; the murmur3 default stays the engine-internal
-    scale path."""
+    against exact n-gram Jaccard in tests/test_dedup.py. The signature is
+    ONE md5 per shingle, then a universal-hash family mod 2³¹−1 with
+    seeded coefficients, so the banded buckets AND the est-Jaccard values
+    replicate in DuckDB (value-level oracle; the coefficient lists are
+    inlined into the SQL)."""
     docs = t(spark, sf_dir, "documents")
-    return lsh_candidate_pairs(docs, "doc_id", "text", num_hashes=32, bands=8,
-                               hash_fn="md5u")
+    return lsh_candidate_pairs(docs, "doc_id", "text", num_hashes=32, bands=8)
 
 
 @register(
@@ -383,12 +380,11 @@ def minhash_lsh_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def simhash_dups(spark: SparkSession, sf_dir: str) -> DataFrame:
     """SimHash near-dups — 4×16-bit banded blocking + exact hamming.
-    Runs the ``hash_fn="md5"`` bit derivation so DuckDB reproduces the
-    identical 64-bit signatures (substr+strpos nibble arithmetic over the
-    same md5 hex), turning the former rows-only check into a value-level
-    oracle; xxhash64 stays the engine-internal fast path."""
+    Each token's bits are the leading 64 bits of its md5, so DuckDB
+    reproduces the identical 64-bit signatures (substr+strpos nibble
+    arithmetic over the same md5 hex): a value-level oracle."""
     docs = t(spark, sf_dir, "documents")
-    return simhash_near_dups(docs, "doc_id", "text", max_hamming=6, hash_fn="md5")
+    return simhash_near_dups(docs, "doc_id", "text", max_hamming=6)
 
 
 @register(
@@ -2461,7 +2457,6 @@ def temperature_sample_langs(spark: SparkSession, sf_dir: str) -> DataFrame:
             6,
         ).alias("rate"),
     )
-    from dopams_etl_spark.functions.ids import md5_bucket32
 
     u32 = md5_bucket32(F.col("doc_id"))
     sampled = (
@@ -2544,8 +2539,6 @@ def weighted_sample_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     TakeOrdered top-20; no global sort materializes (Spark plans
     ORDER BY + LIMIT as TakeOrderedAndProject — per-partition top-20,
     driver merge of 20·P rows)."""
-    from dopams_etl_spark.functions.ids import md5_bucket32
-
     docs = t(spark, sf_dir, "documents")
     u = (md5_bucket32(F.col("doc_id")) + F.lit(1.0)) / F.lit(4294967297.0)
     keyed = docs.select(
@@ -3178,15 +3171,13 @@ def minhash_jaccard_estimate_error(spark: SparkSession, sf_dir: str) -> DataFram
     the 32-hash/8-band operating point before a 100 TB dedup run trusts
     it. The exact side touches only the candidate pairs (array
     intersection per pair), never all pairs, so the report costs one
-    LSH pass plus candidate-count work. Same md5u universal-hash family
+    LSH pass plus candidate-count work. Same md5 universal-hash family
     as minhash_lsh_pairs, replicated value-level in the oracle."""
     from dopams_etl_spark.functions.textfns import word_shingles
     from dopams_etl_spark.operators.dedup import lsh_candidate_pairs
 
     docs = t(spark, sf_dir, "documents")
-    pairs = lsh_candidate_pairs(
-        docs, "doc_id", "text", num_hashes=32, bands=8, hash_fn="md5u"
-    )
+    pairs = lsh_candidate_pairs(docs, "doc_id", "text", num_hashes=32, bands=8)
     sh = docs.select(
         "doc_id", word_shingles("text", 3).alias("sh")
     ).filter(F.size("sh") > 0)
@@ -3268,11 +3259,7 @@ def dsir_importance_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select(
             "doc_id",
             "lang",
-            (
-                F.conv(F.substring(F.md5(F.col("w")), 1, 8), 16, 10)
-                .cast("long")
-                % 256
-            ).alias("b"),
+            (md5_words(F.md5(F.col("w")))[0] % 256).alias("b"),
         )
     )
     tgt = (

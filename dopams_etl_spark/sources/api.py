@@ -48,6 +48,15 @@ def should_retry(status_code: int | None) -> bool:
     return status_code >= 500
 
 
+def _status_code(exc: Exception) -> int | None:
+    """HTTP status of a fetcher's error: ``exc.status_code``, else
+    ``exc.response.status_code`` (the ``requests`` shape), else None."""
+    status = getattr(exc, "status_code", None)
+    if status is None:
+        status = getattr(getattr(exc, "response", None), "status_code", None)
+    return status
+
+
 def fetch_chunked(
     spark: SparkSession,
     fetcher: ChunkFetcher,
@@ -56,8 +65,9 @@ def fetch_chunked(
     policy: RetryPolicy = RetryPolicy(),
     sleeper: Callable[[float], None] = time.sleep,
 ) -> DataFrame:
-    """S1: pull every (from, to) chunk through the fetcher with retries and
-    build ONE frame from all chunks' records, in chunk order (overlap
+    """S1: pull every (from, to) chunk through the fetcher, retrying as
+    ``should_retry`` says for the error's status (a 4xx is raised at once),
+    and build ONE frame from all chunks' records, in chunk order (overlap
     re-sends included). One ``createDataFrame`` gives one scan leaf, where
     a frame per chunk would union N scans whose partitions each cost a
     task downstream. Empty feeds yield an empty, correctly-typed frame."""
@@ -68,8 +78,8 @@ def fetch_chunked(
             try:
                 chunk = fetcher(start, end)
                 break
-            except Exception:
-                if attempt >= policy.max_retries:
+            except Exception as exc:
+                if attempt >= policy.max_retries or not should_retry(_status_code(exc)):
                     raise
                 sleeper(policy.delay(attempt))
         records.extend(chunk)

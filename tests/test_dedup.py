@@ -1,7 +1,10 @@
+import hashlib
 import itertools
+import re
 
 from pyspark.sql import functions as F
 
+from dopams_etl_spark.functions.ids import md5_words
 from dopams_etl_spark.operators.dedup import (
     exact_dedup,
     lsh_candidate_pairs,
@@ -75,6 +78,56 @@ def test_simhash_near_dups_hamming(spark):
     ham_12 = near[(1, 2)]
     ham_13 = bin(sigs[1] ^ sigs[3]).count("1")
     assert ham_12 < ham_13  # near-dup pair closer than unrelated pair
+
+
+def _reference_simhash(text):
+    """Pure-Python SimHash in the oracle's bit order: bit b is hex char
+    b//4 of md5(token), nibble bit b%4 (least significant first), voted
+    over the distinct lowercased whitespace tokens; a set majority bit b
+    contributes 2^b to the signed 64-bit signature."""
+    if text is None:
+        return None
+    votes = [0] * 64
+    for tok in set(re.split(r"\s+", text.strip(" ").lower())):
+        hx = hashlib.md5(tok.encode()).hexdigest()
+        for b in range(64):
+            votes[b] += 1 if (int(hx[b // 4], 16) >> (b % 4)) & 1 else -1
+    v = sum(1 << b for b in range(64) if votes[b] > 0)
+    return v - (1 << 64) if v >= 1 << 63 else v
+
+
+# "b": md5 92eb5ffe… — the first word's top bit is set, so it becomes the
+# sign bit of the packed long (and hex char 15 'c' sets the signature's).
+SIMHASH_CASES = [
+    (1, "b"),
+    (2, "b b B a"),
+    (3, "the quick brown fox the quick"),
+    (4, ""),
+    (5, None),
+    (6, DOCS[0][1]),
+    (7, "  Padded   words\tand tabs  "),
+]
+
+
+def test_simhash_matches_pure_python_reference(spark):
+    assert int(hashlib.md5(b"b").hexdigest()[:8], 16) >= 1 << 31
+    df = spark.createDataFrame(SIMHASH_CASES, "doc_id long, text string")
+    got = {r["doc_id"]: r["simhash"] for r in simhash64(df, "text").collect()}
+    assert got == {i: _reference_simhash(text) for i, text in SIMHASH_CASES}
+    assert got[1] < 0 and got[5] is None
+
+
+def test_md5_words_are_the_leading_hex_words(spark):
+    keys = ["", "a", "b", "dopams", "x" * 100]
+    df = spark.createDataFrame([(k,) for k in keys], "k string")
+    hi, lo = md5_words(F.md5("k"))
+    got = {r["k"]: (r["hi"], r["lo"]) for r in df.select("k", hi.alias("hi"), lo.alias("lo")).collect()}
+    want = {}
+    for k in keys:
+        hx = hashlib.md5(k.encode()).hexdigest()
+        want[k] = (int(hx[:8], 16), int(hx[8:16], 16))
+    assert got == want
+    assert any(h >= 1 << 31 for h, _ in want.values())
 
 
 def test_tiered_dedup_data_completeness_cascade(spark):

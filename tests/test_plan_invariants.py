@@ -87,7 +87,10 @@ def _scalar_cross_joins(plan_str: str) -> int:
 
 
 def test_no_cartesian_products_anywhere(registry_plans):
-    offenders = [n for n, p in registry_plans.items() if "CartesianProduct" in p.executed]
+    """Read from the analyzed plan: at sf0.001 every table is under the
+    broadcast threshold, so a fact×fact cartesian plans as a BNLJ and the
+    executed plan never prints ``CartesianProduct``."""
+    offenders = [n for n, p in registry_plans.items() if _fact_cartesians(p.analyzed)]
     assert not offenders, f"unbounded cartesian in: {offenders}"
 
 
@@ -139,6 +142,51 @@ def _unbounded_fact_hints(plan_str: str) -> list[str]:
                     if sig in sub and not reduced:
                         bad.append(sig)
     return bad
+
+
+def _indent(line: str) -> int:
+    return len(line) - len(line.lstrip(" :+-"))
+
+
+def _scans_unreduced_fact(subtree: list[str]) -> bool:
+    """True when the subtree scans an SF-scaling table with no reducer on
+    the path from the scan up to the subtree's root."""
+    path: list[tuple[int, bool]] = []  # (indent, reduced at or above)
+    for line in subtree:
+        ind = _indent(line)
+        while path and path[-1][0] >= ind:
+            path.pop()
+        reduced = (path[-1][1] if path else False) or any(r in line for r in _REDUCERS)
+        path.append((ind, reduced))
+        if (
+            not reduced
+            and ("Relation [" in line or "Relation spark_catalog" in line)
+            and any(sig in line for sig in _FACT_SIGNATURES)
+        ):
+            return True
+    return False
+
+
+def _fact_cartesians(plan_str: str) -> int:
+    """Count joins with no condition (``Join Cross`` or a bare ``Join
+    Inner``) whose two children both scan an SF-scaling table unreduced:
+    the pair space grows with SF², whatever the physical join."""
+    lines = plan_str.splitlines()
+    n = 0
+    for i, line in enumerate(lines):
+        if line.lstrip(" :+-").rstrip() not in ("Join Cross", "Join Inner"):
+            continue
+        indent = _indent(line)
+        children: list[list[str]] = []
+        for sub in lines[i + 1 :]:
+            if _indent(sub) <= indent:
+                break
+            if _indent(sub) == indent + 3:
+                children.append([])
+            children[-1].append(sub)
+        if len(children) == 2 and all(_scans_unreduced_fact(c) for c in children):
+            n += 1
+    return n
 
 
 def test_no_explicit_broadcast_of_fact_tables(registry_plans):

@@ -51,6 +51,38 @@ def test_fetch_chunked_with_retries(spark):
     assert slept == [1.0]  # 2**0 backoff after the single failure
 
 
+class _StatusError(Exception):
+    """An HTTP error: ``status_code`` on the error itself, or on its
+    ``response`` the way ``requests.HTTPError`` carries it."""
+
+    def __init__(self, status, on_response=False):
+        super().__init__(status)
+        if on_response:
+            self.response = type("Response", (), {"status_code": status})()
+        else:
+            self.status_code = status
+
+
+@pytest.mark.parametrize(
+    "status, on_response, calls, slept",
+    [(404, False, 1, []), (404, True, 1, []), (503, True, 3, [1.0, 2.0])],
+)
+def test_fetch_chunked_follows_the_retry_matrix(spark, status, on_response, calls, slept):
+    """RetryPolicy's matrix: a 4xx is raised at once, with no sleep; a 5xx
+    retries with backoff until ``max_retries`` runs out."""
+    seen, sleeps = [], []
+
+    def failing(start, end):
+        seen.append(start)
+        raise _StatusError(status, on_response)
+
+    chunks = [(datetime.datetime(2024, 1, 1), datetime.datetime(2024, 1, 6))]
+    with pytest.raises(_StatusError):
+        fetch_chunked(spark, failing, chunks, SCHEMA, RetryPolicy(2, 1.0), sleeps.append)
+    assert len(seen) == calls
+    assert sleeps == slept
+
+
 TYPED = StructType([
     StructField("id", LongType()),
     StructField("ts", TimestampType()),
