@@ -101,7 +101,8 @@ def load_table(
         raise KeyError(f"unknown table {name!r}; catalog has {TABLES}")
     with _TABLE_CACHE_LOCK:
         per_session = _TABLE_CACHE.setdefault(spark, {})
-    cached = per_session.get((sf_dir, name))
+    key = (sf_dir, name)
+    cached = per_session.get(key)
     if cached is not None:
         return cached
     if name == "events":
@@ -125,11 +126,30 @@ def load_table(
     # relational queries (shuffling raw rows costs more than the map side
     # saves when per-row work is cheap); only the per-row-expensive
     # text/vector operators repartition, via partitioning.ensure_parallelism.
-    per_session[(sf_dir, name)] = df
-    return df
+    # Two threads that both missed read the table twice; the first store
+    # wins, so every caller holds the one memoized frame.
+    return per_session.setdefault(key, df)
 
 
 def register_views(spark: SparkSession, sf_dir: str = DEFAULT_SF_DIR) -> None:
-    """Register every table as a temp view so ``spark.sql`` works directly."""
-    for t in TABLES:
-        load_table(spark, t, sf_dir).createOrReplaceTempView(t)
+    """Register every table as a temp view so ``spark.sql`` works directly.
+
+    The tables are read concurrently, one thread per table: each uncached
+    ``load_table`` runs one Spark job (the footer read for the schema), and
+    run back to back those jobs leave all but one core idle. The reads'
+    jobs carry the caller's job group, description and tags. The views are
+    registered in ``TABLES`` order once every read has finished; if a read
+    fails, the views of the tables before it are registered and its error
+    is raised. The reads are memoized like any ``load_table``, so a second
+    call on the same session starts no Spark job."""
+    from concurrent.futures import ThreadPoolExecutor
+
+    from pyspark import inheritable_thread_target
+
+    with ThreadPoolExecutor(max_workers=len(TABLES)) as pool:
+        # One wrapper per read: each gets its own copy of the caller's
+        # local properties, so a read that sets one changes no other's.
+        reads = [pool.submit(inheritable_thread_target(spark)(load_table), spark, t, sf_dir)
+                 for t in TABLES]
+    for t, read in zip(TABLES, reads):
+        read.result().createOrReplaceTempView(t)

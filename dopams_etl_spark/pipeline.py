@@ -30,6 +30,8 @@ class StageResult:
     attempts: int
     error: str | None = None
     result: object = None
+    # wall time of the stage's attempts, retry sleeps excluded
+    seconds: float = 0.0
 
 
 @dataclass
@@ -60,21 +62,24 @@ def run_pipeline(
 ) -> RunReport:
     """Sequential execution with per-stage retries (2 s / 5 s backoff like
     the master). A stage exhausting retries fails the run (subsequent
-    stages skip unless ``stop_on_failure=False``)."""
+    stages skip unless ``stop_on_failure=False``). Each result records the
+    stage's wall seconds, summed over its attempts."""
     report = RunReport()
     for stage in normalize_stages(stages):
-        attempts, err, result, ok = 0, None, None, False
+        attempts, err, result, ok, seconds = 0, None, None, False, 0.0
         while attempts <= stage.retries and not ok:
+            t0 = time.perf_counter()
             try:
                 result = stage.fn()
                 ok = True
             except Exception as exc:  # noqa: BLE001 - stage isolation is the point
                 err = f"{exc.__class__.__name__}: {exc}"
-                if attempts < stage.retries:
-                    delay = stage.retry_delays[min(attempts, len(stage.retry_delays) - 1)]
-                    sleeper(delay)
+            seconds += time.perf_counter() - t0
+            if not ok and attempts < stage.retries:
+                sleeper(stage.retry_delays[min(attempts, len(stage.retry_delays) - 1)])
             attempts += 1
-        report.results.append(StageResult(stage.name, ok, attempts, None if ok else err, result))
+        report.results.append(
+            StageResult(stage.name, ok, attempts, None if ok else err, result, seconds))
         if not ok and stop_on_failure:
             break
     return report

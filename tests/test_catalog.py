@@ -1,0 +1,96 @@
+"""``register_views`` reads its tables concurrently; these pin it to the
+serial ``load_table`` path: same views, same schemas, same memo, one job per
+table under the caller's job group, and the serial loop's failure."""
+
+import shutil
+import threading
+
+import pytest
+
+from dopams_etl_spark.catalog import TABLES, _TABLE_CACHE, forget_path, load_table, register_views
+
+SF = "/root/testdata/sf0.001"
+
+
+def _memo(session) -> dict:
+    return dict(_TABLE_CACHE.get(session, {}))
+
+
+def test_concurrent_load_table_callers_share_one_frame(spark):
+    s = spark.newSession()
+    start = threading.Barrier(4)
+    got = [None] * 4
+
+    def read(i):
+        start.wait()
+        got[i] = load_table(s, "orders", SF)
+
+    threads = [threading.Thread(target=read, args=(i,)) for i in range(4)]
+    for t in threads:
+        t.start()
+    for t in threads:
+        t.join(timeout=120)
+    assert all(df is got[0] for df in got)
+    memo = _memo(s)
+    assert list(memo) == [(SF, "orders")] and memo[(SF, "orders")] is got[0]
+
+
+def test_register_views_matches_serial_load_table(spark):
+    s, serial = spark.newSession(), spark.newSession()
+    register_views(s, SF)
+    for t in TABLES:
+        assert s.catalog.tableExists(t), t
+        assert s.table(t).schema == load_table(serial, t, SF).schema, t
+    assert dict(s.table("events").dtypes)["ts"] == "timestamp"
+    assert set(_memo(s)) == {(SF, t) for t in TABLES}
+
+
+def test_register_views_reads_run_under_callers_job_group(spark):
+    s = spark.newSession()
+    sc = spark.sparkContext
+    group = "register-views-jobs"
+
+    def jobs_after_register() -> int:
+        sc.setJobGroup(group, group)
+        try:
+            register_views(s, SF)
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+            sc.setLocalProperty("spark.job.description", None)
+        sc._jsc.sc().listenerBus().waitUntilEmpty()
+        return len(sc.statusTracker().getJobIdsForGroup(group))
+
+    assert jobs_after_register() == len(TABLES)  # one footer read per table
+    assert jobs_after_register() == len(TABLES)  # memoized: the second call adds none
+
+
+def test_register_views_missing_table_fails_like_serial_loop(spark, tmp_path):
+    missing = "orders"
+    for t in TABLES:
+        if t != missing:
+            shutil.copy(f"{SF}/{t}.parquet", tmp_path / f"{t}.parquet")
+    data = str(tmp_path)
+
+    serial = spark.newSession()
+    with pytest.raises(Exception) as serial_err:
+        for t in TABLES:
+            load_table(serial, t, data)
+
+    s = spark.newSession()
+    with pytest.raises(serial_err.type) as err:
+        register_views(s, data)
+    assert f"{missing}.parquet" in str(err.value)
+    before = TABLES[: TABLES.index(missing)]
+    assert [t for t in TABLES if s.catalog.tableExists(t)] == list(before)
+
+
+def test_register_views_on_hadoop_fs_uri(spark):
+    uri = "file://" + SF
+    s = spark.newSession()
+    register_views(s, uri)
+    assert all(s.catalog.tableExists(t) for t in TABLES)
+    assert s.table("region").count() == load_table(spark, "region", SF).count()
+    assert set(_memo(s)) == {(uri, t) for t in TABLES}
+
+    forget_path(f"{uri}/orders.parquet")
+    assert set(_memo(s)) == {(uri, t) for t in TABLES if t != "orders"}

@@ -381,6 +381,37 @@ def test_pipeline_stops_on_exhausted_retries():
     assert [r.name for r in report.results] == ["dead"]
 
 
+def test_pipeline_records_stage_seconds_without_retry_sleeps(monkeypatch):
+    """``StageResult.seconds`` sums the stage's attempts on the wall clock
+    and leaves out the retry sleep between them."""
+    from dopams_etl_spark import pipeline
+
+    clock, slept = [0.0], []
+    monkeypatch.setattr(pipeline.time, "perf_counter", lambda: clock[0])
+
+    def sleeper(delay):
+        slept.append(delay)
+        clock[0] += delay
+
+    def flaky():
+        clock[0] += 1.5
+        if not slept:
+            raise RuntimeError("transient")
+        return "done"
+
+    def quick():
+        clock[0] += 0.25
+
+    report = run_pipeline(
+        [Stage("flaky", flaky, retry_delays=(7.0,)), Stage("quick", quick)], sleeper=sleeper)
+    assert report.ok and slept == [7.0]
+    flaky_r, quick_r = report.results
+    assert (flaky_r.name, flaky_r.ok, flaky_r.attempts, flaky_r.error, flaky_r.result) == (
+        "flaky", True, 2, None, "done")
+    assert flaky_r.seconds == 3.0
+    assert quick_r.seconds == 0.25 and quick_r.attempts == 1
+
+
 def test_transliterate_basic(spark):
     from dopams_etl_spark.functions.translit import transliterate_basic
 

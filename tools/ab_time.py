@@ -13,6 +13,13 @@ query that raises (the sweep goes on). A last line carries the repo
 root, the query count and the summed ``warm_s``. For an A/B, run it from
 a checkout of each commit and alternate invocations so both trees see
 the same ambient conditions (one box drifts ±20% across hours).
+
+The named queries run one after another in one process, so a query's
+``warm_s`` depends on the queries named before it (JVM warm-up carries
+over). For an A/B, time a query whose plan did not change in a process of
+its own: after a query the change made faster it reads slower
+(``minhash_lsh_pairs`` after ``simhash_dups``: faster in 2/10 pairs,
+median +19%; alone, with an identical plan: 7/10, +1%).
 """
 
 from __future__ import annotations
