@@ -14,6 +14,7 @@ from __future__ import annotations
 import os
 import threading
 import weakref
+from urllib.parse import urlparse
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -46,8 +47,8 @@ TABLES = (
 # gets its own entries, and a collected session's plans evict with it.
 # The cached plan snapshots the file listing at first read, so whatever
 # replaces a table's files must drop its entries with ``forget_path``, as
-# the library's writers (``KeyedTableSink.upsert``,
-# ``gold.compact_table``) do.
+# the library's writers do (``sinks.publish_parquet``, under
+# ``KeyedTableSink.upsert`` and ``gold``'s refresh and compaction).
 _TABLE_CACHE: "weakref.WeakKeyDictionary[SparkSession, dict[tuple[str, str], DataFrame]]" = (
     weakref.WeakKeyDictionary()
 )
@@ -57,6 +58,10 @@ _TABLE_CACHE_LOCK = threading.Lock()
 
 
 def _norm_path(path: str) -> str:
+    # ``file:///x`` and ``file:/x`` name the local path ``/x``: one spelling
+    # for both, so a writer's ``forget_path`` drops a read made under either.
+    if path.startswith("file:"):
+        path = urlparse(path).path
     return path.rstrip("/") if "://" in path else os.path.abspath(path)
 
 

@@ -13,9 +13,9 @@ the round driver's oracle gate sees it:
   plan → generate → validate loop against the live catalog; the resulting
   SQL's DataFrame is the query output (N5's row-capped executor collects,
   so it stays covered in test_nlq instead).
-- S7/I4 ``KeyedTableSink``: two batches upsert through the sink (parquet
-  fallback path here; Delta MERGE when available) and the on-disk table is
-  the output.
+- S7/I4 ``KeyedTableSink``: two batches upsert through the sink (a
+  latest-wins merge published by a staged parquet swap) and the on-disk
+  table is the output.
 
 Temp artifacts go under a fresh ``tempfile.mkdtemp`` per call — queries
 stay self-contained and re-runnable.
@@ -170,8 +170,8 @@ def nlq_search_customers(spark: SparkSession, sf_dir: str) -> DataFrame:
 def sink_upsert_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     """S7 upsert sink + I4 newer-than guard through ``KeyedTableSink``:
     batch 1 writes every order tagged OLD/v1, batch 2 upserts the
-    ``% 3 == 0`` keys as NEW/v2 — the on-disk table (parquet fallback of
-    the Delta MERGE) must show exactly the oracle's CASE split."""
+    ``% 3 == 0`` keys as NEW/v2 — the on-disk parquet table must show
+    exactly the oracle's CASE split."""
     from dopams_etl_spark.sinks import KeyedTableSink
 
     o = t(spark, sf_dir, "orders").select("o_orderkey")
@@ -182,7 +182,7 @@ def sink_upsert_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
         "o_orderkey", F.lit("NEW").alias("batch_tag"), F.lit(2).alias("version")
     )
     path = tempfile.mkdtemp(prefix="dopams_sink_") + "/orders_tagged"
-    sink = KeyedTableSink(spark, path, "o_orderkey", "version", fmt="auto")
+    sink = KeyedTableSink(spark, path, "o_orderkey", "version")
     sink.upsert(b1)
     sink.upsert(b2)
     return sink.read().select("o_orderkey", "batch_tag", "version")

@@ -243,18 +243,6 @@ class JsonlShardWriter(DataSourceWriter):
             os.path.join(self.path, f".part-*.{self.job_id}.*.tmp")
         ):
             os.remove(orphan)
-        # ... plus pre-job-id-format leftovers (".part-NNNNN.<attempt>.tmp",
-        # 4 dot-fields vs the current 5): no CURRENT writer produces that
-        # shape, so they can only be dead orphans from before the format
-        # change — without this they would accumulate forever. Two
-        # concurrent commits can race on the same legacy file, so a
-        # missing target is success, not an error.
-        for orphan in glob.glob(os.path.join(self.path, ".part-*.tmp")):
-            if len(os.path.basename(orphan).split(".")) == 4:
-                try:
-                    os.remove(orphan)
-                except FileNotFoundError:
-                    pass  # the other commit swept it first
 
     def abort(self, messages) -> None:
         import glob

@@ -2,7 +2,6 @@
 step 7 — the streaming surface the reference's batch chunking implies)."""
 
 from dopams_etl_spark.streaming.incremental import (
-    append_once_batch,
     read_stream_parquet,
     stateful_sessionize,
     stream_dedup,
@@ -13,7 +12,6 @@ from dopams_etl_spark.streaming.incremental import (
 )
 
 __all__ = [
-    "append_once_batch",
     "read_stream_parquet",
     "stateful_sessionize",
     "stream_dedup",

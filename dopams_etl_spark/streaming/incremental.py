@@ -9,7 +9,9 @@ semantics fall out of Structured Streaming primitives:
   of chunk overlap;
 - checkpoint state (I3) lives in the query's checkpoint location;
 - latest-wins upsert (S7/I4) runs per micro-batch via ``foreachBatch``
-  over the batch merge operator — one code path for batch AND streaming.
+  over the batch merge operator — one code path for batch AND streaming;
+- an exactly-once append is the parquet file sink, whose own commit log
+  skips a replayed micro-batch.
 
 Tests drive these with ``trigger(availableNow=True)`` over a file source,
 so they are deterministic and finite.
@@ -133,15 +135,12 @@ def stream_upsert_parquet(
     """S7-as-a-stream: each micro-batch upserts into the parquet target
     through the SAME ``KeyedTableSink`` the batch path uses
     (``foreachBatch``): the latest-wins merge is staged, then swapped in,
-    so a crash mid-batch leaves the previous table readable. On a real
-    deployment the target would be Delta/Iceberg and the sink's
-    ``MERGE INTO`` path applies.
+    so a crash mid-batch leaves the previous table readable. A replayed
+    batch re-merges the same rows, which latest-wins makes a no-op.
     """
 
     def merge_batch(batch: DataFrame, _batch_id: int) -> None:
-        KeyedTableSink(
-            batch.sparkSession, target_path, keys, version_col, fmt="parquet"
-        ).upsert(batch)
+        KeyedTableSink(batch.sparkSession, target_path, keys, version_col).upsert(batch)
 
     return (
         stream.writeStream.foreachBatch(merge_batch)
@@ -151,175 +150,21 @@ def stream_upsert_parquet(
     )
 
 
-def _publish_staged(fs, hadoop_path, staging, published) -> bool:
-    """Atomically promote a staged batch directory to its published
-    partition path. Returns True on commit, False when ANOTHER attempt
-    of the same batch already committed (a lost race), raises on a real
-    rename failure.
-
-    Hadoop rename-into-existing-directory semantics matter here: if
-    ``published`` already exists (a same-batch-id attempt won the race
-    between the caller's probe and this rename), rename does NOT fail —
-    it moves the staging dir INSIDE it as ``published/<staging_name>/``
-    and returns true. That is detected by the uuid-unique nested path;
-    exactly the nested duplicate is removed and the batch is reported
-    as a skipped replay, so a lost race can never double-commit."""
-    staging_name = staging.getName()
-    try:
-        renamed = fs.rename(staging, published)
-    except Exception:
-        # The rename itself can THROW (not return false) when the source
-        # vanished under it: a concurrent same-id winner publishes and
-        # then sweeps every `_staging/<id>-*` dir, and that sweep can
-        # land in the window between this attempt's write completing and
-        # this rename running (the write-phase guard in
-        # ``append_once_batch`` only covers sweeps DURING the write).
-        # Same recovery as a false return: drop any staging remnant,
-        # re-probe the ledger — an existing published dir means the
-        # batch IS committed and this attempt is a skipped replay;
-        # anything else is a real failure the engine must see. The
-        # cleanup delete is best-effort: if IT throws too (transient FS
-        # error), the ORIGINAL rename exception must still propagate —
-        # a masked cause would hide the real failure from the engine.
-        try:
-            fs.delete(staging, True)
-        except Exception:
-            pass
-        if fs.exists(published):
-            return False
-        raise
-    nested = hadoop_path(published, staging_name)
-    if renamed and fs.exists(nested):
-        # The delete MUST succeed: a surviving nested dir would be
-        # listed by Spark's recursive leaf-file scan as extra rows of
-        # this partition — the exact double-count this helper prevents.
-        if not fs.delete(nested, True) and fs.exists(nested):
-            raise IOError(
-                f"append_once_batch: lost publish race AND failed to "
-                f"remove nested duplicate {nested} — partition would "
-                f"double-count; manual cleanup required"
-            )
-        return False
-    if not renamed:
-        # rename failed outright (or the dst existed on a FS that
-        # rejects instead of nesting). Clean the private staging dir,
-        # then re-probe: an existing published dir means the batch IS
-        # committed (replay); anything else is a real failure the
-        # engine must see and retry.
-        fs.delete(staging, True)
-        if fs.exists(published):
-            return False
-        raise IOError(
-            f"append_once_batch: publish rename failed -> {published}"
-        )
-    return True
-
-
-def _reject_legacy_layout(fs, target, target_path: str) -> None:
-    """Refuse to append partition-dir batches into a target that holds a
-    PRE-partition-layout sink (flat part files, possibly carrying the old
-    ``_batch_id`` COLUMN ledger). Mixing the layouts is doubly unsafe: a
-    replayed old batch id re-applies (the directory probe cannot see
-    column-ledger commits), and ``spark.read.parquet`` fails outright on
-    a directory that mixes flat files with ``batch_id=N/`` partition
-    dirs. One listStatus of direct children — underscore/dot-hidden
-    entries (``_staging``, ``_SUCCESS``, checkpoints) and ``batch_id=``
-    partition dirs are the only legal residents."""
-    if not fs.exists(target):
-        return
-    for st in fs.listStatus(target):
-        name = st.getPath().getName()
-        if name.startswith(("_", ".")) or name.startswith("batch_id="):
-            continue
-        raise IOError(
-            f"append_once_batch: target {target_path} holds entry "
-            f"'{name}' that is not a batch_id=<id>/ partition — this "
-            "looks like a sink written by the legacy flat-file/_batch_id-"
-            "column format. Appending would mix layouts (unreadable) and "
-            "break replay detection (duplicate batches). Migrate first: "
-            "rewrite each legacy batch into batch_id=<id>/ partition "
-            "dirs (e.g. read with the _batch_id column and write via "
-            "partitionBy), or point this sink at a fresh target."
-        )
-
-
-def append_once_batch(batch: DataFrame, batch_id: int, target_path: str) -> bool:
-    """Apply one micro-batch as an exactly-once APPEND. Appends are not
-    idempotent (unlike the latest-wins merge above), so a batch replayed
-    after a sink-write-then-crash must be detected and skipped.
-
-    Ledger and data must commit ATOMICALLY — a batch-id column embedded
-    in a multi-file append is not enough, because a crash mid-commit
-    leaves SOME part files (carrying the id) in the target: the
-    restarted batch's probe then sees the id and skips, permanently
-    losing the unwritten rows. Instead each batch stages to a hidden
-    ``_staging/`` dir under the target and is PUBLISHED by one directory
-    rename to the partition path ``batch_id=<id>/``. The published
-    directory IS the ledger entry, so the rename commits ledger+data
-    together: crash before it leaves only underscore-hidden staging
-    files Spark readers ignore (swept on the next successful publish of
-    the same id); crash after it is a completed commit the replay
-    detects by directory existence — one filesystem metadata probe, no
-    data scan. This mirrors Delta's ``txnAppId``/``txnVersion`` commit.
-
-    Requires atomic directory rename (local FS, HDFS). On object stores
-    (S3/GCS) rename is copy+delete — use a manifest-committing table
-    format there instead; this function makes no exactly-once claim on
-    such stores. Readers get the batch id via partition discovery as a
-    ``batch_id`` column, and the partition layout makes any downstream
-    per-batch filter a directory prune.
-
-    Returns True when the batch was applied, False on a skipped replay."""
-    import uuid
-
-    spark = batch.sparkSession
-    jvm = spark._jvm
-    hadoop_path = jvm.org.apache.hadoop.fs.Path
-    target = hadoop_path(target_path)
-    fs = target.getFileSystem(spark._jsc.hadoopConfiguration())
-    _reject_legacy_layout(fs, target, target_path)
-    published = hadoop_path(target, f"batch_id={batch_id}")
-    if fs.exists(published):
-        return False
-    staging = hadoop_path(target, f"_staging/{batch_id}-{uuid.uuid4().hex}")
-    try:
-        batch.write.mode("overwrite").parquet(str(staging))
-    except Exception:
-        # A concurrent SAME-id winner publishes and then sweeps every
-        # `_staging/<id>-*` dir — including this attempt's, mid-write
-        # (observed as FileNotFoundException on our _temporary dir). If
-        # the batch turns out to be committed, this attempt is a lost
-        # race to report as a skipped replay, not a failure; anything
-        # else is a real write error the engine must see and retry.
-        fs.delete(staging, True)
-        if fs.exists(published):
-            return False
-        raise
-    if not _publish_staged(fs, hadoop_path, staging, published):
-        return False
-    # Lazy sweep: orphaned staging dirs for THIS batch id only (our own
-    # crashed prior attempts — scoping by id never touches a concurrent
-    # writer's in-flight staging for other batches).
-    staging_root = hadoop_path(target, "_staging")
-    if fs.exists(staging_root):
-        for st in fs.listStatus(staging_root):
-            if st.getPath().getName().startswith(f"{batch_id}-"):
-                fs.delete(st.getPath(), True)
-    return True
-
-
 def stream_append_once(
     stream: DataFrame,
     target_path: str,
     checkpoint_path: str,
 ) -> StreamingQuery:
-    """Exactly-once append sink via ``foreachBatch`` + the batch-id
-    ledger (``append_once_batch``): at-least-once delivery from the
-    engine plus an idempotent apply equals exactly-once in the target."""
+    """Exactly-once APPEND through Spark's parquet file sink. Each
+    micro-batch's files are recorded under its batch id in
+    ``<target>/_spark_metadata`` before the checkpoint marks the batch
+    done, and ``spark.read.parquet(target)`` lists only the recorded files:
+    a batch replayed after a crash between the two commits is skipped by
+    that log, and the files of an attempt that died before its log entry
+    are never read."""
     return (
-        stream.writeStream.foreachBatch(
-            lambda b, i: append_once_batch(b, i, target_path)
-        )
+        stream.writeStream.format("parquet")
+        .option("path", target_path)
         .option("checkpointLocation", checkpoint_path)
         .trigger(availableNow=True)
         .start()

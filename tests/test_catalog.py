@@ -1,6 +1,8 @@
 """``register_views`` reads its tables concurrently; these pin it to the
 serial ``load_table`` path: same views, same schemas, same memo, one job per
-table under the caller's job group, and the serial loop's failure."""
+table under the caller's job group, and the serial loop's failure. The
+memo's eviction by ``forget_path`` treats a ``file:`` URI and the local
+path it names as one table."""
 
 import shutil
 import threading
@@ -94,3 +96,24 @@ def test_register_views_on_hadoop_fs_uri(spark):
 
     forget_path(f"{uri}/orders.parquet")
     assert set(_memo(s)) == {(uri, t) for t in TABLES if t != "orders"}
+
+
+@pytest.mark.parametrize("read_as_uri", [True, False], ids=["read-uri-write-local", "read-local-write-uri"])
+def test_upsert_evicts_a_memo_read_under_the_other_spelling(spark, tmp_path, read_as_uri):
+    """``file:///x`` and ``/x`` name one table: a sink publishing under one
+    spelling drops a ``load_table`` memo read under the other, so the next
+    read lists the new files instead of the deleted ones."""
+    from pyspark.sql import functions as F
+
+    from dopams_etl_spark.sinks import KeyedTableSink
+
+    shutil.copy(f"{SF}/orders.parquet", tmp_path / "orders.parquet")
+    local, uri = str(tmp_path), "file://" + str(tmp_path)
+    read_dir, write_dir = (uri, local) if read_as_uri else (local, uri)
+    s = spark.newSession()
+    orders = load_table(s, "orders", read_dir)
+    before = orders.count()
+    fresh = orders.limit(7).withColumn("o_orderkey", F.col("o_orderkey") + 10_000_000)
+    KeyedTableSink(s, f"{write_dir}/orders.parquet", "o_orderkey", "o_orderdate").upsert(fresh)
+    assert (read_dir, "orders") not in _memo(s)
+    assert load_table(s, "orders", read_dir).count() == before + 7

@@ -1,13 +1,16 @@
-"""KeyedTableSink: Delta-gated MERGE with atomic parquet fallback."""
+"""KeyedTableSink: latest-wins merge published by a staged parquet swap."""
+
+import sys
+import types
 
 import pytest
 from pyspark.sql import functions as F
 
-from dopams_etl_spark.sinks import KeyedTableSink, delta_available
+from dopams_etl_spark.sinks import KeyedTableSink
 
 
-def _sink(spark, tmp_path, fmt="auto"):
-    return KeyedTableSink(spark, str(tmp_path / "tbl"), "id", "version", fmt=fmt)
+def _sink(spark, tmp_path):
+    return KeyedTableSink(spark, str(tmp_path / "tbl"), "id", "version")
 
 
 def _batch(spark, rows):
@@ -48,16 +51,20 @@ def test_swap_leaves_no_staging_dirs(spark, tmp_path):
     assert s.read().count() == 1
 
 
-def test_delta_fmt_raises_without_delta(spark, tmp_path):
-    if delta_available():  # pragma: no cover - not in this container
-        pytest.skip("delta installed; gate not exercisable")
-    with pytest.raises(RuntimeError, match="delta-spark is not installed"):
-        _sink(spark, tmp_path, fmt="delta")
-
-
-def test_auto_falls_back_to_parquet_here(spark, tmp_path):
+def test_importable_delta_package_leaves_the_parquet_path(spark, tmp_path, monkeypatch):
+    """A ``delta`` package that imports (delta-spark installed, but the
+    session built without its jars and SQL extension) does not change the
+    write path: two upserts on a ``get_spark`` session read back the
+    latest-wins rows."""
+    delta = types.ModuleType("delta")
+    delta.__path__ = []
+    monkeypatch.setitem(sys.modules, "delta", delta)
+    monkeypatch.setitem(sys.modules, "delta.tables", types.ModuleType("delta.tables"))
     s = _sink(spark, tmp_path)
-    assert s.fmt == ("delta" if delta_available() else "parquet")
+    s.upsert(_batch(spark, [(1, 1, "a"), (2, 1, "b")]))
+    s.upsert(_batch(spark, [(1, 2, "a2"), (3, 1, "c")]))
+    got = {(r["id"], r["version"], r["val"]) for r in s.read().collect()}
+    assert got == {(1, 2, "a2"), (2, 1, "b"), (3, 1, "c")}
 
 
 def test_matches_upsert_latest_wins_oracle_semantics(spark, tmp_path):

@@ -555,17 +555,12 @@ def test_jsonl_writer_sweep_is_job_scoped(spark, tmp_path):
     foreign = os.path.join(out, ".part-00000.fedcba987654.7.tmp")
     with open(foreign, "w") as fh:
         fh.write('{"id": 999}\n')
-    legacy = os.path.join(out, ".part-00002.41.tmp")
-    with open(legacy, "w") as fh:
-        fh.write('{"id": 998}\n')
 
     df = spark.range(0, 6).selectExpr("id").repartition(2)
     df.write.format("jsonl_sink").option("path", out).mode("append").save()
 
     assert os.path.exists(foreign), "swept a concurrent job's temp file"
-    # ... while this job's own temps AND pre-format legacy orphans
-    # (4 dot-fields — no current writer produces them) are gone
-    assert not os.path.exists(legacy)
+    # ... while this job's own temps are gone
     leftovers = set(glob.glob(os.path.join(out, ".part-*.tmp"))) - {foreign}
     assert not leftovers
 

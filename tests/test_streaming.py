@@ -288,324 +288,101 @@ def test_checkpoint_restart_exactly_once(spark, tmp_path):
     for r in rows:
         assert want[(r["window_start"], r["event_type"])] == r["n"]
 
+def _append_once(spark, src, out, ck, schema):
+    from dopams_etl_spark.streaming import stream_append_once
+
+    stream_append_once(read_stream_parquet(spark, src, schema), out, ck).awaitTermination(120)
+
+
+def _sorted_rows(df):
+    return sorted(tuple(r) for r in df.collect())
+
+
+def _source_halves(spark):
+    rows = _sorted_rows(_events_subset(spark, 100).select("event_id", "user_id"))
+    schema = "event_id long, user_id long"
+    return spark.createDataFrame(rows[:50], schema), spark.createDataFrame(rows[50:], schema)
+
+
+def _drop_log_entry(log_dir, batch_id):
+    """Delete one batch's entry (and its ``.crc``) from a streaming log."""
+    import os
+
+    os.remove(os.path.join(log_dir, str(batch_id)))
+    crc = os.path.join(log_dir, f".{batch_id}.crc")
+    if os.path.exists(crc):
+        os.remove(crc)
+
+
+def _last_commit(ck):
+    import os
+
+    return max(int(n) for n in os.listdir(os.path.join(ck, "commits")) if n.isdigit())
+
+
+def test_append_once_streams_source_rows(spark, tmp_path):
+    src, out, ck = (str(tmp_path / d) for d in ("src", "out", "ck"))
+    part1, part2 = _source_halves(spark)
+    part1.write.parquet(src)
+    part2.write.mode("append").parquet(src)
+
+    _append_once(spark, src, out, ck, part1.schema)
+    want = _sorted_rows(part1.unionByName(part2))
+    assert _sorted_rows(spark.read.parquet(out)) == want
+    assert (tmp_path / "out" / "_spark_metadata").is_dir()
+
 
 def test_append_once_skips_replayed_batches(spark, tmp_path):
-    """Exactly-once append: the batch-id ledger rejects a replayed
-    micro-batch (at-least-once redelivery after a sink-write crash)
-    while admitting new ids — the streamed result equals the source
-    exactly, no duplicates, and a manual replay of an applied id is a
-    no-op."""
-    from dopams_etl_spark.streaming import append_once_batch, stream_append_once
+    """A crash after the sink committed a batch but before the checkpoint
+    did (its last ``commits/<n>`` lost) replays that batch on restart; the
+    sink's own log skips it, so no row is written twice."""
+    import os
 
-    src = str(tmp_path / "src")
-    out = str(tmp_path / "out")
-    ck = str(tmp_path / "ck")
-    ev = _events_subset(spark, 100).select("event_id", "user_id")
-    ev.write.parquet(src)
+    src, out, ck = (str(tmp_path / d) for d in ("src", "out", "ck"))
+    part1, part2 = _source_halves(spark)
+    src_df = part1.unionByName(part2)
+    src_df.write.parquet(src)
 
-    from dopams_etl_spark.streaming import read_stream_parquet
-
-    stream = read_stream_parquet(spark, src, ev.schema)
-    q = stream_append_once(stream, out, ck)
-    q.awaitTermination(120)
-    sink = spark.read.parquet(out)
-    n = sink.count()
-    assert n == 100
-    applied_ids = [r["batch_id"] for r in sink.select("batch_id").distinct().collect()]
-    assert applied_ids, "no batch ids recorded"
-
-    # replay an ALREADY-APPLIED batch id -> skipped, count unchanged
-    replay = spark.read.parquet(src).limit(10)
-    assert append_once_batch(replay, applied_ids[0], out) is False
-    assert spark.read.parquet(out).count() == n
-
-    # a NEW batch id -> applied
-    assert append_once_batch(replay, max(applied_ids) + 1, out) is True
-    assert spark.read.parquet(out).count() == n + 10
+    _append_once(spark, src, out, ck, src_df.schema)
+    files = sorted(os.listdir(out))
+    _drop_log_entry(os.path.join(ck, "commits"), _last_commit(ck))
+    _append_once(spark, src, out, ck, src_df.schema)
+    assert _sorted_rows(spark.read.parquet(out)) == _sorted_rows(src_df)
+    assert sorted(os.listdir(out)) == files  # the replay wrote no file
 
 
 def test_append_once_crash_before_publish_is_retried(spark, tmp_path):
-    """Atomic-publish recovery: a crash AFTER staging but BEFORE the
-    publish rename must leave the batch uncommitted — staged rows are
-    invisible to readers (underscore-hidden), and a retry of the same
-    batch id applies it (the pre-fix embedded-ledger design lost these
-    rows forever because the probe saw the id in partial part files)."""
-    from dopams_etl_spark.streaming import append_once_batch
-
-    out = str(tmp_path / "out")
-    ev = _events_subset(spark, 30).select("event_id", "user_id")
-    assert append_once_batch(ev.limit(20), 0, out) is True
-
-    # Simulate batch 1 crashing mid-commit: data staged, never renamed.
-    staged = ev.limit(7)
-    staged.write.parquet(str(tmp_path / "out" / "_staging" / "1-deadbeef"))
-    sink = spark.read.parquet(out)
-    assert sink.count() == 20, "staged rows must be invisible to readers"
-
-    # The engine redelivers batch 1: it must APPLY (orphaned staging is
-    # not a commit) and sweep its own dead staging attempt.
-    assert append_once_batch(staged, 1, out) is True
-    assert spark.read.parquet(out).count() == 27
-    assert not (tmp_path / "out" / "_staging" / "1-deadbeef").exists()
-
-    # Replay of the now-committed id is a directory-existence no-op.
-    assert append_once_batch(staged, 1, out) is False
-    assert spark.read.parquet(out).count() == 27
-
-
-def test_append_once_lost_race_nests_then_cleans(spark, tmp_path):
-    """Hadoop rename into an EXISTING directory does not fail — it
-    nests the source inside it and returns true. A lost same-batch race
-    (published appears between the caller's probe and its rename) must
-    detect its uuid-named nested duplicate, remove it, and report a
-    skipped replay — never double-commit (the pre-fix code trusted
-    rename's return value and silently nested duplicate rows)."""
+    """A crash after the sink wrote a batch's files but before it logged
+    them (no ``_spark_metadata/<n>``, no ``commits/<n>``): the restart
+    writes the batch again, and the dead attempt's files stay unread."""
     import os
 
-    from dopams_etl_spark.streaming import append_once_batch
-    from dopams_etl_spark.streaming.incremental import _publish_staged
+    src, out, ck = (str(tmp_path / d) for d in ("src", "out", "ck"))
+    part1, part2 = _source_halves(spark)
+    src_df = part1.unionByName(part2)
+    src_df.write.parquet(src)
 
-    out = str(tmp_path / "out")
-    ev = _events_subset(spark, 20).select("event_id", "user_id")
-    assert append_once_batch(ev.limit(12), 5, out) is True
-    n = spark.read.parquet(out).count()
-    assert n == 12
-
-    # The loser of the race: its staging dir is written, then it calls
-    # _publish_staged while batch_id=5 is ALREADY published (exactly
-    # the post-probe state of the losing attempt).
-    jvm = spark._jvm
-    hadoop_path = jvm.org.apache.hadoop.fs.Path
-    target = hadoop_path(out)
-    fs = target.getFileSystem(spark._jsc.hadoopConfiguration())
-    staging = hadoop_path(target, "_staging/5-cafecafecafe")
-    ev.limit(7).write.parquet(str(staging))
-    published = hadoop_path(target, "batch_id=5")
-
-    assert _publish_staged(fs, hadoop_path, staging, published) is False
-    assert spark.read.parquet(out).count() == n, "race loser double-committed"
-    # no nested directory left inside the published partition
-    pub = tmp_path / "out" / "batch_id=5"
-    assert not [p for p in os.listdir(pub) if os.path.isdir(pub / p)], (
-        "nested staging dir left inside published partition"
-    )
-
-
-def test_append_once_rejects_legacy_flat_layout(spark, tmp_path):
-    """ADVICE r8: a sink written by the PRE-partition-dir format (flat
-    part files carrying a _batch_id COLUMN ledger) must be refused, not
-    appended into — mixing layouts makes the directory unreadable and
-    the replay probe blind to column-ledger commits (duplicate
-    batches). The target must be left untouched."""
-    import pytest
-
-    from dopams_etl_spark.streaming import append_once_batch
-
-    out = str(tmp_path / "legacy")
-    ev = _events_subset(spark, 10).select("event_id", "user_id")
-    ev.withColumn("_batch_id", F.lit(0)).write.parquet(out)
-
-    with pytest.raises(IOError, match="legacy"):
-        append_once_batch(ev, 1, out)
-    # untouched: same rows, still readable as the old flat layout
-    assert spark.read.parquet(out).count() == 10
-
-
-def test_append_once_two_concurrent_writers(spark, tmp_path):
-    """VERDICT r8 task 6: two sessions appending DISJOINT batch ids to
-    ONE target concurrently — every batch must land exactly once (no
-    lost, no duplicated), and a deliberate SAME-id contention must
-    commit exactly one copy."""
-    import threading
-
-    from dopams_etl_spark.streaming import append_once_batch
-
-    src = str(tmp_path / "src")
-    out = str(tmp_path / "out")
-    ev = _events_subset(spark, 40).select("event_id", "user_id")
-    ev.write.parquet(src)
-
-    errors: list[Exception] = []
-
-    def writer(session, ids):
-        try:
-            data = session.read.parquet(src)
-            for b in ids:
-                assert append_once_batch(data.limit(5), b, out) is True
-        except Exception as e:  # surfaced to the main thread below
-            errors.append(e)
-
-    other = spark.newSession()
-    t1 = threading.Thread(target=writer, args=(spark, [0, 2, 4, 6]))
-    t2 = threading.Thread(target=writer, args=(other, [1, 3, 5, 7]))
-    t1.start(); t2.start(); t1.join(120); t2.join(120)
-    assert not errors, errors
-
+    _append_once(spark, src, out, ck, src_df.schema)
+    last = _last_commit(ck)
+    _drop_log_entry(os.path.join(out, "_spark_metadata"), last)
+    _drop_log_entry(os.path.join(ck, "commits"), last)
+    orphans = {f for f in os.listdir(out) if f.startswith("part-")}
+    _append_once(spark, src, out, ck, src_df.schema)
     sink = spark.read.parquet(out)
-    assert sink.count() == 40
-    ids = sorted(
-        r["batch_id"] for r in sink.select("batch_id").distinct().collect()
-    )
-    assert ids == list(range(8)), f"lost/duplicated batches: {ids}"
-
-    # same-id contention: both writers race batch 99; exactly one wins
-    results: list[bool] = []
-
-    def race(session):
-        try:
-            results.append(
-                append_once_batch(session.read.parquet(src).limit(5), 99, out)
-            )
-        except Exception as e:
-            errors.append(e)
-
-    r1 = threading.Thread(target=race, args=(spark,))
-    r2 = threading.Thread(target=race, args=(other,))
-    r1.start(); r2.start(); r1.join(120); r2.join(120)
-    assert not errors, errors
-    assert sorted(results) in ([False, True], [True]), results
-    assert spark.read.parquet(out).count() == 45
+    assert _sorted_rows(sink) == _sorted_rows(src_df)
+    read = {os.path.basename(f) for f in sink.inputFiles()}
+    assert read and not read & orphans
 
 
-def test_publish_staged_vanished_staging_is_skipped_replay(spark, tmp_path):
-    """VERDICT r9 task 1: the winner's `_staging/<id>-*` sweep can land
-    BETWEEN the loser's write completing and its rename — then
-    ``fs.rename`` sees a nonexistent source and (depending on the FS)
-    THROWS instead of returning false. Either way, with the batch
-    already published the loser must report a skipped replay (False),
-    never surface an exception."""
-    from dopams_etl_spark.streaming import append_once_batch
-    from dopams_etl_spark.streaming.incremental import _publish_staged
+def test_append_once_restart_appends_only_new_files(spark, tmp_path):
+    """Source files that arrive after a run are the only rows the restart
+    from the same checkpoint appends."""
+    src, out, ck = (str(tmp_path / d) for d in ("src", "out", "ck"))
+    part1, part2 = _source_halves(spark)
+    part1.write.parquet(src)
 
-    out = str(tmp_path / "out")
-    ev = _events_subset(spark, 20).select("event_id", "user_id")
-    assert append_once_batch(ev.limit(12), 5, out) is True
-
-    jvm = spark._jvm
-    hadoop_path = jvm.org.apache.hadoop.fs.Path
-    target = hadoop_path(out)
-    fs = target.getFileSystem(spark._jsc.hadoopConfiguration())
-    # the loser's staging dir has ALREADY been swept away by the winner
-    staging = hadoop_path(target, "_staging/5-deaddeaddead")
-    assert not fs.exists(staging)
-    published = hadoop_path(target, "batch_id=5")
-
-    assert _publish_staged(fs, hadoop_path, staging, published) is False
-    assert spark.read.parquet(out).count() == 12
-
-    # ... but a vanished source with NO committed batch is a real
-    # failure the engine must see and retry — never silently swallowed.
-    import pytest
-
-    ghost = hadoop_path(target, "_staging/7-deaddeaddead")
-    missing = hadoop_path(target, "batch_id=7")
-    with pytest.raises(Exception):
-        _publish_staged(fs, hadoop_path, ghost, missing)
-    assert not fs.exists(missing)
-
-
-def test_append_once_same_id_race_stress(spark, tmp_path):
-    """VERDICT r9 task 1 stress: loop the same-id two-writer race many
-    times. Every iteration must commit exactly one copy and surface
-    zero exceptions — the loser always reports a skipped replay, even
-    when the winner's sweep lands in the write-to-rename window."""
-    import threading
-
-    from dopams_etl_spark.streaming import append_once_batch
-
-    src = str(tmp_path / "src")
-    out = str(tmp_path / "out")
-    ev = _events_subset(spark, 30).select("event_id", "user_id")
-    ev.write.parquet(src)
-    other = spark.newSession()
-
-    rounds = 10
-    for b in range(rounds):
-        errors: list[Exception] = []
-        results: list[bool] = []
-        barrier = threading.Barrier(2)
-
-        def race(session, b=b, errors=errors, results=results,
-                 barrier=barrier):
-            try:
-                data = session.read.parquet(src).limit(5)
-                barrier.wait(30)
-                results.append(append_once_batch(data, b, out))
-            except Exception as e:
-                errors.append(e)
-
-        t1 = threading.Thread(target=race, args=(spark,))
-        t2 = threading.Thread(target=race, args=(other,))
-        t1.start(); t2.start(); t1.join(120); t2.join(120)
-        assert not errors, f"iteration {b}: {errors}"
-        assert sorted(results) in ([False, True], [True]), (b, results)
-
-    sink = spark.read.parquet(out)
-    assert sink.count() == 5 * rounds
-    ids = sorted(
-        r["batch_id"] for r in sink.select("batch_id").distinct().collect()
-    )
-    assert ids == list(range(rounds)), f"lost/duplicated batches: {ids}"
-
-
-class _StubPath:
-    def __init__(self, name):
-        self._name = name
-
-    def getName(self):
-        return self._name
-
-
-class _StubFs:
-    """Minimal FileSystem double: rename always THROWS (the vanished-source
-    path Hadoop's RawLocalFileSystem can't be made to take — it returns
-    false instead, so the JVM-backed test above never reaches the except
-    branch). ``delete_raises`` additionally makes the best-effort cleanup
-    delete throw, to prove it can't mask the original rename exception."""
-
-    def __init__(self, published_exists, delete_raises=False):
-        self._published_exists = published_exists
-        self._delete_raises = delete_raises
-        self.deleted = []
-
-    def rename(self, src, dst):
-        raise IOError("rename: source vanished")
-
-    def delete(self, path, recursive):
-        if self._delete_raises:
-            raise IOError("delete: transient FS error")
-        self.deleted.append(path)
-        return True
-
-    def exists(self, path):
-        return self._published_exists
-
-
-def test_publish_staged_rename_throws_stub_fs():
-    """ADVICE r10: RawLocalFileSystem.rename with a missing source returns
-    false rather than throwing, so the JVM test above exercises only the
-    'not renamed' branch. Drive the except branch directly with a stub fs:
-    rename THROWS → (a) published exists ⇒ skipped replay (False), staging
-    remnant swept; (b) published missing ⇒ the ORIGINAL rename exception
-    re-raises; (c) published missing AND the cleanup delete throws too ⇒
-    still the rename exception, never the delete's (no masking)."""
-    import pytest
-
-    from dopams_etl_spark.streaming.incremental import _publish_staged
-
-    staging = _StubPath("5-deaddeaddead")
-    published = _StubPath("batch_id=5")
-    hadoop_path = lambda base, name: _StubPath(name)  # noqa: E731
-
-    fs = _StubFs(published_exists=True)
-    assert _publish_staged(fs, hadoop_path, staging, published) is False
-    assert fs.deleted == [staging]
-
-    fs = _StubFs(published_exists=False)
-    with pytest.raises(IOError, match="source vanished"):
-        _publish_staged(fs, hadoop_path, staging, published)
-    assert fs.deleted == [staging]
-
-    fs = _StubFs(published_exists=False, delete_raises=True)
-    with pytest.raises(IOError, match="source vanished"):
-        _publish_staged(fs, hadoop_path, staging, published)
+    _append_once(spark, src, out, ck, part1.schema)
+    assert _sorted_rows(spark.read.parquet(out)) == _sorted_rows(part1)
+    part2.write.mode("append").parquet(src)
+    _append_once(spark, src, out, ck, part1.schema)
+    assert _sorted_rows(spark.read.parquet(out)) == _sorted_rows(part1.unionByName(part2))
