@@ -55,6 +55,11 @@ _TABLE_CACHE: "weakref.WeakKeyDictionary[SparkSession, dict[tuple[str, str], Dat
 # Guards iterating _TABLE_CACHE against a session added concurrently:
 # ``forget_path`` runs on ``gold.refresh_gold``'s pool threads.
 _TABLE_CACHE_LOCK = threading.Lock()
+# (sf_dir, table) -> lock held while that table is read, so threads that
+# miss the memo together read it once: ``gold.refresh_gold`` builds its
+# MVs concurrently, and they read the same tables. Shared by all sessions;
+# at worst two sessions' first reads of one table run one after the other.
+_READ_LOCKS: dict[tuple[str, str], threading.Lock] = {}
 
 
 def _norm_path(path: str) -> str:
@@ -87,7 +92,8 @@ def load_table(
 ) -> DataFrame:
     """Read one catalog table (memoized per session — see _TABLE_CACHE;
     the cached plan pins its first file listing, so a writer replacing
-    the table's files calls ``forget_path``).
+    the table's files calls ``forget_path``). Callers that miss the memo
+    at once wait for one read and share its frame.
 
     No ``mergeSchema`` — the testdata schemas are fixed, and footer merging
     costs a full file listing + footer read per query. Schema evolution is
@@ -104,12 +110,21 @@ def load_table(
     """
     if name not in TABLES:
         raise KeyError(f"unknown table {name!r}; catalog has {TABLES}")
+    key = (sf_dir, name)
     with _TABLE_CACHE_LOCK:
         per_session = _TABLE_CACHE.setdefault(spark, {})
-    key = (sf_dir, name)
+        read_lock = _READ_LOCKS.setdefault(key, threading.Lock())
     cached = per_session.get(key)
     if cached is not None:
         return cached
+    with read_lock:
+        cached = per_session.get(key)
+        if cached is None:
+            cached = per_session[key] = _read_table(spark, name, sf_dir)
+    return cached
+
+
+def _read_table(spark: SparkSession, name: str, sf_dir: str) -> DataFrame:
     if name == "events":
         # Harmless where the native ntz read applies; required on builds
         # where the TIMESTAMP(NANOS) scan would otherwise raise
@@ -131,9 +146,7 @@ def load_table(
     # relational queries (shuffling raw rows costs more than the map side
     # saves when per-row work is cheap); only the per-row-expensive
     # text/vector operators repartition, via partitioning.ensure_parallelism.
-    # Two threads that both missed read the table twice; the first store
-    # wins, so every caller holds the one memoized frame.
-    return per_session.setdefault(key, df)
+    return df
 
 
 def register_views(spark: SparkSession, sf_dir: str = DEFAULT_SF_DIR) -> None:
@@ -141,20 +154,18 @@ def register_views(spark: SparkSession, sf_dir: str = DEFAULT_SF_DIR) -> None:
 
     The tables are read concurrently, one thread per table: each uncached
     ``load_table`` runs one Spark job (the footer read for the schema), and
-    run back to back those jobs leave all but one core idle. The reads'
-    jobs carry the caller's job group, description and tags. The views are
+    run back to back those jobs leave all but one core idle. The reads run
+    with ``spark`` as the active session and carry the caller's job group,
+    description and tags (``session.thread_target``). The views are
     registered in ``TABLES`` order once every read has finished; if a read
     fails, the views of the tables before it are registered and its error
     is raised. The reads are memoized like any ``load_table``, so a second
     call on the same session starts no Spark job."""
     from concurrent.futures import ThreadPoolExecutor
 
-    from pyspark import inheritable_thread_target
+    from dopams_etl_spark.session import thread_target
 
     with ThreadPoolExecutor(max_workers=len(TABLES)) as pool:
-        # One wrapper per read: each gets its own copy of the caller's
-        # local properties, so a read that sets one changes no other's.
-        reads = [pool.submit(inheritable_thread_target(spark)(load_table), spark, t, sf_dir)
-                 for t in TABLES]
+        reads = [pool.submit(thread_target(spark, load_table), spark, t, sf_dir) for t in TABLES]
     for t, read in zip(TABLES, reads):
         read.result().createOrReplaceTempView(t)

@@ -47,39 +47,43 @@ def refresh_gold(
     order. Duplicate names collapse (the master dedups repeated refresh
     steps).
 
-    The MVs refresh concurrently: each plan is built on the calling thread,
-    in order, and its write runs on a pool thread while the next plan
-    builds. AQE coalesces an MV's late stages to a task or two, so one
-    MV at a time leaves most cores idle. The pool threads inherit the
-    caller's job group, description and tags. The call returns, or raises
-    the first failure in ``names`` order, only once every submitted write
-    has finished, so a retry never races a still-running write."""
+    The MVs refresh concurrently, one pool thread each: the thread builds
+    the MV's plan and runs its observed, partitioned write, so neither the
+    builds nor the writes wait for one another. AQE coalesces an MV's late
+    stages to a task or two, so one MV at a time leaves most cores idle.
+    The pool threads run with ``spark`` as the active session and inherit
+    the caller's job group, description and tags (``session.thread_target``).
+    Each name is looked up on the calling thread, so an unknown name raises
+    ``KeyError`` once the writes submitted before it have finished. The
+    call returns, or raises the first failure in ``names`` order, only once
+    every submitted refresh has finished, so a retry never races a
+    still-running write."""
     from concurrent.futures import ThreadPoolExecutor
 
-    from pyspark import inheritable_thread_target
-    from pyspark.sql import Observation
-
     from dopams_etl_spark.plans import catalog
+    from dopams_etl_spark.session import thread_target
 
     qs = catalog.queries()
     distinct = list(dict.fromkeys(names))
-    writes = {}
+    refreshes = {}
     with ThreadPoolExecutor(max_workers=max(len(distinct), 1)) as pool:
         for name in distinct:
-            # Row count comes from an Observation piggybacked on the write
-            # job — ONE pass per MV instead of write + re-read + count.
-            obs = Observation(f"gold_refresh_{name}")
-            df = qs[name](spark, sf_dir).observe(obs, F.count(F.lit(1)).alias("rows"))
-            writer = df.write
-            parts = GOLD_PARTITIONING.get(name)
-            if parts:
-                writer = writer.partitionBy(*parts)
-            write = inheritable_thread_target(spark)(_write_observed)
-            writes[name] = pool.submit(write, spark, writer, f"{out_dir}/{name}", obs)
-    return {name: fut.result() for name, fut in writes.items()}
+            build = qs[name]
+            refreshes[name] = pool.submit(thread_target(spark, _refresh_one), spark, name, build,
+                                          sf_dir, f"{out_dir}/{name}")
+    return {name: fut.result() for name, fut in refreshes.items()}
 
 
-def _write_observed(spark: SparkSession, writer, path: str, obs) -> int:
+def _refresh_one(spark: SparkSession, name: str, build, sf_dir: str, path: str) -> int:
+    from pyspark.sql import Observation
+
+    # Row count comes from an Observation piggybacked on the write job —
+    # ONE pass per MV instead of write + re-read + count.
+    obs = Observation(f"gold_refresh_{name}")
+    writer = build(spark, sf_dir).observe(obs, F.count(F.lit(1)).alias("rows")).write
+    parts = GOLD_PARTITIONING.get(name)
+    if parts:
+        writer = writer.partitionBy(*parts)
     publish_parquet(spark, writer, path)
     return obs.get["rows"]
 

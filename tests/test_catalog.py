@@ -5,6 +5,7 @@ memo's eviction by ``forget_path`` treats a ``file:`` URI and the local
 path it names as one table."""
 
 import shutil
+import sys
 import threading
 
 import pytest
@@ -19,22 +20,37 @@ def _memo(session) -> dict:
 
 
 def test_concurrent_load_table_callers_share_one_frame(spark):
+    """Callers that miss the memo together wait for one read of the table:
+    one frame and one footer-read job, not one per caller (more callers
+    than cores, with frequent thread switches)."""
     s = spark.newSession()
-    start = threading.Barrier(4)
-    got = [None] * 4
+    sc = spark.sparkContext
+    group = "concurrent-load-table"
+    callers = 8
+    start = threading.Barrier(callers)
+    got = [None] * callers
 
     def read(i):
+        sc.setJobGroup(group, group)
         start.wait()
         got[i] = load_table(s, "orders", SF)
 
-    threads = [threading.Thread(target=read, args=(i,)) for i in range(4)]
-    for t in threads:
-        t.start()
-    for t in threads:
-        t.join(timeout=120)
+    switch = sys.getswitchinterval()
+    sys.setswitchinterval(1e-5)
+    try:
+        threads = [threading.Thread(target=read, args=(i,)) for i in range(callers)]
+        for t in threads:
+            t.start()
+        for t in threads:
+            t.join(timeout=120)
+    finally:
+        sys.setswitchinterval(switch)
+    assert not any(t.is_alive() for t in threads)
     assert all(df is got[0] for df in got)
     memo = _memo(s)
     assert list(memo) == [(SF, "orders")] and memo[(SF, "orders")] is got[0]
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    assert len(sc.statusTracker().getJobIdsForGroup(group)) == 1
 
 
 def test_register_views_matches_serial_load_table(spark):

@@ -2,6 +2,7 @@
 
 import datetime
 import os
+import threading
 import warnings
 from decimal import Decimal
 
@@ -339,6 +340,134 @@ def test_gold_refresh_build_failure_leaves_no_running_write(spark, tmp_path):
     assert _written(f"{out}/firs_mv")
     assert _no_active_jobs(spark)
     assert spark.read.parquet(f"{out}/firs_mv").count() == 1500
+
+
+def _session_seen_here(spark, seen: list) -> None:
+    """Record, for the current thread, its id, whether the JVM active
+    session is ``spark``'s, and the shuffle-partition count ``SQLConf.get``
+    reads (Spark's fallback conf says 200 where no session is active)."""
+    from pyspark.sql import SparkSession
+
+    active = SparkSession._get_j_spark_session_class(spark._jvm).getActiveSession()
+    conf = spark._jvm.org.apache.spark.sql.internal.SQLConf.get()
+    seen.append((threading.get_ident(),
+                 active.isDefined() and active.get().equals(spark._jsparkSession),
+                 conf.getConfString("spark.sql.shuffle.partitions")))
+
+
+def test_gold_refresh_builds_on_pool_threads_with_the_session_active(spark, tmp_path, monkeypatch):
+    """Each MV's plan is built on its pool thread, and there ``SQLConf.get``
+    is the caller's session conf, not Spark's fallback."""
+    from dopams_etl_spark.gold import refresh_gold
+
+    seen = []
+
+    def probe(spark, sf_dir):
+        _session_seen_here(spark, seen)
+        return spark.range(3)
+
+    _registry_with(monkeypatch, {"probe_mv": probe})
+    assert refresh_gold(spark, SF, str(tmp_path / "gold"), ("probe_mv",)) == {"probe_mv": 3}
+    partitions = spark.conf.get("spark.sql.shuffle.partitions")
+    assert partitions == "4"
+    assert seen and all(t != threading.get_ident() for t, _, _ in seen), seen
+    assert seen == [(t, True, partitions) for t, _, _ in seen]
+
+
+def test_register_views_reads_with_the_session_active(spark, monkeypatch):
+    """``register_views``' pool threads see the caller's session as active."""
+    from dopams_etl_spark import catalog
+
+    seen = []
+    real = catalog.load_table
+
+    def recording(spark, name, sf_dir):
+        _session_seen_here(spark, seen)
+        return real(spark, name, sf_dir)
+
+    monkeypatch.setattr(catalog, "load_table", recording)
+    catalog.register_views(spark, SF)
+    assert len(seen) == len(catalog.TABLES)
+    assert all(t != threading.get_ident() for t, _, _ in seen), seen
+    assert seen == [(t, True, spark.conf.get("spark.sql.shuffle.partitions")) for t, _, _ in seen]
+
+
+def test_gold_refresh_build_error_on_a_pool_thread_waits_for_other_writes(spark, tmp_path,
+                                                                           monkeypatch):
+    """A plan build that raises in Python, between real MVs, is raised only
+    once every other refresh has finished; the other MVs are written."""
+    from dopams_etl_spark.gold import refresh_gold
+
+    def broken(spark, sf_dir):
+        raise ValueError("broken at build")
+
+    _registry_with(monkeypatch, {"broken_mv": broken})
+    out = str(tmp_path / "gold")
+    with pytest.raises(ValueError, match="broken at build"):
+        refresh_gold(spark, SF, out, ("firs_mv", "broken_mv", "accuseds_mv"))
+    assert _written(f"{out}/firs_mv") and _written(f"{out}/accuseds_mv")
+    assert not os.path.exists(f"{out}/broken_mv")
+    assert _no_active_jobs(spark)
+    assert spark.read.parquet(f"{out}/firs_mv").count() == 1500
+    assert spark.read.parquet(f"{out}/accuseds_mv").count() == 6000
+
+
+def test_gold_refresh_equals_the_plans_collected_on_the_main_thread(spark, tmp_path):
+    """The five gold tables written from pool threads hold exactly the rows
+    of the same plans run on the calling thread."""
+    from dopams_etl_spark.gold import GOLD_PIPELINES, load_gold, refresh_gold
+    from dopams_etl_spark.plans import catalog
+
+    out = str(tmp_path / "gold")
+    counts = refresh_gold(spark, SF, out)
+    qs = catalog.queries()
+    for name in GOLD_PIPELINES:
+        want = qs[name](spark, SF)
+        # partition columns read back last, and as their inferred type
+        got = load_gold(spark, out, name).select(
+            *[F.col(f.name).cast(f.dataType) for f in want.schema.fields])
+        assert counts[name] == want.count() > 0, name
+        assert got.exceptAll(want).count() == 0, name
+        assert want.exceptAll(got).count() == 0, name
+
+
+_FRESH_PROCESS_REFRESHES = """
+import json, sys, tempfile
+from dopams_etl_spark.gold import refresh_gold
+from dopams_etl_spark.session import get_spark
+
+spark = get_spark("codegen-cache-test")
+spark.sparkContext.setLogLevel("ERROR")
+metric = spark._jvm.org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME()
+compiled = []
+for _ in range(3):
+    before = metric.getCount()
+    with tempfile.TemporaryDirectory() as out:
+        refresh_gold(spark, sys.argv[1], out)
+    compiled.append(metric.getCount() - before)
+print(json.dumps(compiled))
+"""
+
+
+def test_repeated_gold_refresh_in_a_fresh_process_compiles_almost_nothing():
+    """Spark's codegen cache is JVM-global and sized by whichever thread
+    compiles first. In a process whose first Spark work is ``refresh_gold``
+    (so its pool threads compile first), the third refresh finds its
+    generated classes still cached. This needs a process of its own: in
+    the test JVM other tests compile first, on the main thread."""
+    import json
+    import subprocess
+    import sys
+
+    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    env = {**os.environ, "SPARK_GRAFT_DRIVER_MEM": "1g",
+           "SPARK_GRAFT_CPUS": os.environ.get("SPARK_GRAFT_CPUS", "2")}
+    run = subprocess.run([sys.executable, "-c", _FRESH_PROCESS_REFRESHES, SF], cwd=root, env=env,
+                         capture_output=True, text=True, timeout=600)
+    assert run.returncode == 0, run.stderr[-3000:]
+    compiled = json.loads(run.stdout.strip().splitlines()[-1])
+    assert compiled[0] > 50, compiled  # the first refresh compiles its MVs
+    assert compiled[2] <= 10, compiled
 
 
 def test_pipeline_retry_and_refresh_dedup():

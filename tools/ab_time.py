@@ -8,9 +8,12 @@ Usage:
 
 Per query it prints one JSON line: ``build_s`` (DataFrame construction),
 ``first_s`` (first execution: optimization + codegen + run) and
-``warm_s`` (min of ``AB_RUNS`` further executions), or ``error`` for a
-query that raises (the sweep goes on). A last line carries the repo
-root, the query count and the summed ``warm_s``. For an A/B, run it from
+``warm_s`` (min of ``AB_RUNS`` further executions), with
+``first_compiles`` and ``warm_compiles``, the generated classes Spark
+compiled during the first run and during all the warm runs (a warm run
+that compiles did not find its generated code in Spark's codegen cache);
+or ``error`` for a query that raises (the sweep goes on). A last line
+carries the repo root, the query count and the summed ``warm_s``. For an A/B, run it from
 a checkout of each commit and alternate invocations so both trees see
 the same ambient conditions (one box drifts ±20% across hours).
 
@@ -42,6 +45,12 @@ def _noop_write_s(df) -> float:
     return time.perf_counter() - t0
 
 
+def _compiles(spark) -> int:
+    """Generated classes compiled in this JVM so far."""
+    codegen = spark._jvm.org.apache.spark.metrics.source.CodegenMetrics
+    return codegen.METRIC_COMPILATION_TIME().getCount()
+
+
 def main() -> None:
     from dopams_etl_spark.plans import catalog
     from dopams_etl_spark.session import get_spark
@@ -56,11 +65,15 @@ def main() -> None:
             t0 = time.perf_counter()
             df = qs[name](spark, SF_DIR)
             build_s = time.perf_counter() - t0
+            c0 = _compiles(spark)
             first_s = _noop_write_s(df)
+            c1 = _compiles(spark)
             warm[name] = min(_noop_write_s(df) for _ in range(RUNS))
             print(json.dumps({"q": name, "build_s": round(build_s, 3),
                               "first_s": round(first_s, 3),
-                              "warm_s": round(warm[name], 3)}), flush=True)
+                              "warm_s": round(warm[name], 3),
+                              "first_compiles": c1 - c0,
+                              "warm_compiles": _compiles(spark) - c1}), flush=True)
         except Exception as e:  # keep sweeping; a broken query is its own finding
             print(json.dumps({"q": name, "error": f"{type(e).__name__}: {e}"}), flush=True)
         finally:

@@ -364,15 +364,27 @@ def pushdown_tuple(df) -> tuple[int, int, int, int]:
     return pushdown_counts(executed_plan(df))
 
 
+def codegen_stages(df) -> int:
+    """Whole-stage codegen spans of ``df``'s static plan. Adaptive execution
+    forms codegen stages only as it runs each query stage, so the
+    un-executed plan shows none; this plans the same query with AQE off,
+    which collapses the stages the planner would form without run-time
+    re-planning."""
+    spark = df.sparkSession
+    prev = spark.conf.get("spark.sql.adaptive.enabled")
+    spark.conf.set("spark.sql.adaptive.enabled", "false")
+    try:
+        plan = df.select("*")._jdf.queryExecution().executedPlan().toString()
+    finally:
+        spark.conf.set("spark.sql.adaptive.enabled", prev)
+    return len(set(re.findall(r"\*\((\d+)\)", plan)))
+
+
 def audit_one(name: str, df) -> dict:
-    # Execute THIS DataFrame's own QueryExecution (a write would spawn a
-    # separate one) so AQE finalizes the plan and codegen ids appear.
-    df.collect()
-    plan = df._jdf.queryExecution().executedPlan().toString()
-    # executed AQE plans print "== Final Plan ==" then "== Initial Plan ==";
-    # audit only the final one
-    plan = plan.split("== Initial Plan ==")[0]
-    codegen = len(set(re.findall(r"\*\((\d+)\)", plan)))
+    # Count from the plan as planned, before it runs: the executed AQE plan
+    # depends on run-time choices (join conversion, partition coalescing)
+    # that differ between runs, so its counts move with no code change.
+    plan = executed_plan(df)
     scans = re.findall(r"FileScan parquet \[([^\]]*)\]", plan)
     n_pushed, n_partf = scan_pushdown_counts(plan)
     return {
@@ -380,7 +392,7 @@ def audit_one(name: str, df) -> dict:
         "sort_merge": plan.count("SortMergeJoin"),
         "nested_loop": plan.count("BroadcastNestedLoopJoin") + plan.count("CartesianProduct"),
         "exchanges": plan.count("Exchange"),
-        "codegen_stages": codegen,
+        "codegen_stages": codegen_stages(df),
         "scan_widths": [len([c for c in s.split(",") if c.strip()]) for s in scans],
         "pushed_filters": n_pushed,
         "partition_filters": n_partf,
@@ -398,10 +410,15 @@ def main() -> None:
     lines = [
         "# PLANS — physical-plan audit of the headline queries",
         "",
-        f"Generated by `tools/plan_audit.py` on `{SF}`. BHJ = broadcast hash",
-        "join, SMJ = sort-merge join, NLJ = nested-loop/cartesian (must be 0),",
-        "codegen = distinct WholeStageCodegen spans, scan cols = columns each",
-        "parquet scan actually reads (column pruning evidence).",
+        f"Generated by `tools/plan_audit.py` on `{SF}`. Every count is read from",
+        "the plan as planned, before it runs (`plan_audit.executed_plan`, the AQE",
+        "initial plan the pushdown floors read), so a regeneration on an unchanged",
+        "tree reproduces it; at run time AQE may still turn an SMJ into a BHJ,",
+        "coalesce partitions or reuse an exchange (a reused subtree counts at",
+        "each use here). BHJ = broadcast hash join, SMJ = sort-merge join,",
+        "NLJ = nested-loop/cartesian (must be 0), codegen = distinct",
+        "WholeStageCodegen spans of the same query planned with AQE off, scan",
+        "cols = columns each parquet scan actually reads (column pruning evidence).",
         "",
         "| query | BHJ | SMJ | NLJ | exchanges | codegen | scan cols | scans w/ pushed filters | scans w/ partition filters |",
         "|---|---|---|---|---|---|---|---|---|",
