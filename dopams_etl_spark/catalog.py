@@ -37,29 +37,38 @@ TABLES = (
     "embeddings",
 )
 
-# session -> {(sf_dir, table): DataFrame}. ``spark.read.parquet`` does a
-# file listing + footer/schema read EVERY call (~70 ms per table); across
-# a 247-query catalog that re-reads identical metadata thousands of
-# times. DataFrames are immutable lazy plans, so handing back the same
-# object is semantically identical — this is the parquet analog of a
-# metastore's cached table definition. Keyed WEAKLY by the SparkSession
-# object itself: a ``newSession()`` (same applicationId, different conf)
-# gets its own entries, and a collected session's plans evict with it.
-# The cached plan snapshots the file listing at first read, so whatever
-# replaces a table's files must drop its entries with ``forget_path``, as
-# the library's writers do (``sinks.publish_parquet``, under
-# ``KeyedTableSink.upsert`` and ``gold``'s refresh and compaction).
-_TABLE_CACHE: "weakref.WeakKeyDictionary[SparkSession, dict[tuple[str, str], DataFrame]]" = (
+# session -> {normalized path: _Opened}: every parquet table the library
+# reads, opened once per session. ``spark.read.parquet`` lists the files,
+# discovers partitions and runs a footer-read job for the schema EVERY
+# call (~30–70 ms per table), and across a query catalog or a stream of
+# gold lookups that re-derives identical metadata over and over.
+# DataFrames are immutable lazy plans, so handing back the same object is
+# semantically identical — the parquet analog of a metastore's cached
+# table definition. Keyed WEAKLY by the SparkSession object itself: a
+# ``newSession()`` (same applicationId, different conf) gets its own
+# entries, and a collected session's plans evict with it.
+_OPENED: "weakref.WeakKeyDictionary[SparkSession, dict[str, _Opened]]" = (
     weakref.WeakKeyDictionary()
 )
-# Guards iterating _TABLE_CACHE against a session added concurrently:
+# Guards _OPENED against a session or entry added concurrently:
 # ``forget_path`` runs on ``gold.refresh_gold``'s pool threads.
-_TABLE_CACHE_LOCK = threading.Lock()
-# (sf_dir, table) -> lock held while that table is read, so threads that
-# miss the memo together read it once: ``gold.refresh_gold`` builds its
-# MVs concurrently, and they read the same tables. Shared by all sessions;
-# at worst two sessions' first reads of one table run one after the other.
-_READ_LOCKS: dict[tuple[str, str], threading.Lock] = {}
+_OPENED_LOCK = threading.Lock()
+
+
+class _Opened:
+    """One open table: its frame, and the modification time of its root
+    path when it was opened. ``lock`` is held while the table is read, so
+    threads that miss together read it once (``gold.refresh_gold`` builds
+    its MVs concurrently, and they read the same tables); it lives and
+    goes with the entry."""
+
+    __slots__ = ("lock", "frame", "mtime", "root")
+
+    def __init__(self) -> None:
+        self.lock = threading.Lock()
+        self.frame: DataFrame | None = None
+        self.mtime: int | None = None
+        self.root = None  # (FileSystem, Path) of the table's path
 
 
 def _norm_path(path: str) -> str:
@@ -70,19 +79,71 @@ def _norm_path(path: str) -> str:
     return path.rstrip("/") if "://" in path else os.path.abspath(path)
 
 
+def hadoop_fs_path(spark: SparkSession, p: str):
+    """(FileSystem, Path) for ``p`` under the session's Hadoop conf."""
+    hpath = spark._jvm.org.apache.hadoop.fs.Path(p)
+    return hpath.getFileSystem(spark._jsc.hadoopConfiguration()), hpath
+
+
 def forget_path(path: str) -> None:
-    """Drop every session's memoized ``load_table`` read of ``path`` and
-    the partition-probe memo (which cannot tell which entries read
-    ``path``); call after replacing the files under it. Safe to call from
-    several threads at once, and alongside ``load_table``."""
+    """Drop every session's open table at ``path`` and the partition-probe
+    memo (which cannot tell which entries read ``path``); call after
+    replacing the files under it. Safe to call from several threads at
+    once, and alongside ``open_parquet``."""
     _NPART_CACHE.clear()
-    target = _norm_path(path)
-    with _TABLE_CACHE_LOCK:
-        sessions = list(_TABLE_CACHE.values())
-    for per_session in sessions:
-        for sf_dir, name in list(per_session):
-            if _norm_path(f"{sf_dir}/{name}.parquet") == target:
-                per_session.pop((sf_dir, name), None)
+    key = _norm_path(path)
+    with _OPENED_LOCK:
+        for per_session in _OPENED.values():
+            per_session.pop(key, None)
+
+
+def _mtime(entry: _Opened) -> int | None:
+    fs, hpath = entry.root
+    try:
+        return fs.getFileStatus(hpath).getModificationTime()
+    except Exception:  # gone or unreadable: a change, for the caller
+        return None
+
+
+def open_parquet(spark: SparkSession, path: str) -> DataFrame:
+    """``spark.read.parquet(path)``, opened once per session and path
+    (``file:`` URIs and local spellings of one path are one table).
+    Callers that miss at once wait for one read and share its frame.
+
+    The frame pins the file listing made at open. The library's writers
+    drop it with ``forget_path`` (``sinks.publish_parquet``, under
+    ``KeyedTableSink.upsert`` and ``gold``'s refresh and compaction). A
+    table replaced by anything else, such as another process's refresh,
+    is caught on the next call: each hit compares the root path's
+    modification time with the one read at open, and a different one (or
+    a vanished path) drops the entry through ``forget_path`` and opens the
+    path again, so a deleted table raises as an uncached read does. The
+    check sees what changes the root's own entry: a rewritten file, or a
+    directory whose children were added, removed or renamed (every Spark
+    write commits through ``_temporary`` and ``_SUCCESS`` there). It does
+    not see a foreign writer adding files inside a partition subdirectory
+    alone, nor a replacement that keeps the time to the file system's
+    resolution (milliseconds on local disk and HDFS). Where the file
+    system reports no modification time (0, as S3A does for directories),
+    only ``forget_path`` invalidates.
+
+    A path named ``events.parquet`` is the catalog's events table and
+    opens with its ``ts`` normalized (see ``load_table``), whoever opens
+    it, so one path never has two frames."""
+    key = _norm_path(path)
+    with _OPENED_LOCK:
+        entry = _OPENED.setdefault(spark, {}).setdefault(key, _Opened())
+    if entry.frame is None:
+        with entry.lock:
+            if entry.frame is None:
+                entry.root = hadoop_fs_path(spark, path)
+                entry.mtime = _mtime(entry)
+                entry.frame = _read_parquet(spark, path)
+            return entry.frame
+    if entry.mtime == 0 or _mtime(entry) == entry.mtime:
+        return entry.frame
+    forget_path(path)
+    return open_parquet(spark, path)
 
 
 def load_table(
@@ -90,10 +151,8 @@ def load_table(
     name: str,
     sf_dir: str = DEFAULT_SF_DIR,
 ) -> DataFrame:
-    """Read one catalog table (memoized per session — see _TABLE_CACHE;
-    the cached plan pins its first file listing, so a writer replacing
-    the table's files calls ``forget_path``). Callers that miss the memo
-    at once wait for one read and share its frame.
+    """Read one catalog table, ``<sf_dir>/<name>.parquet``, through
+    ``open_parquet`` (once per session, re-opened when its files change).
 
     No ``mergeSchema`` — the testdata schemas are fixed, and footer merging
     costs a full file listing + footer read per query. Schema evolution is
@@ -102,7 +161,7 @@ def load_table(
     ``events.ts`` is TIMESTAMP(NANOS) parquet. Depending on the Spark
     build/conf it scans as long nanos (``nanosAsLong``), TIMESTAMP_NTZ
     (native nanos→ntz read, this build), or TIMESTAMP. All three are
-    normalized here to session-zoned TIMESTAMP — NTZ breaks
+    normalized to session-zoned TIMESTAMP — NTZ breaks
     ``withWatermark`` (requires LTZ) and ``cast(ts as bigint)``, and
     leaving the type session-dependent would make every downstream
     operator re-handle it. The harness runs UTC, where NTZ→LTZ is
@@ -110,22 +169,12 @@ def load_table(
     """
     if name not in TABLES:
         raise KeyError(f"unknown table {name!r}; catalog has {TABLES}")
-    key = (sf_dir, name)
-    with _TABLE_CACHE_LOCK:
-        per_session = _TABLE_CACHE.setdefault(spark, {})
-        read_lock = _READ_LOCKS.setdefault(key, threading.Lock())
-    cached = per_session.get(key)
-    if cached is not None:
-        return cached
-    with read_lock:
-        cached = per_session.get(key)
-        if cached is None:
-            cached = per_session[key] = _read_table(spark, name, sf_dir)
-    return cached
+    return open_parquet(spark, f"{sf_dir}/{name}.parquet")
 
 
-def _read_table(spark: SparkSession, name: str, sf_dir: str) -> DataFrame:
-    if name == "events":
+def _read_parquet(spark: SparkSession, path: str) -> DataFrame:
+    events = os.path.basename(_norm_path(path)) == "events.parquet"
+    if events:
         # Harmless where the native ntz read applies; required on builds
         # where the TIMESTAMP(NANOS) scan would otherwise raise
         # PARQUET_TYPE_ILLEGAL. Runtime-settable, so this works on ANY
@@ -134,8 +183,8 @@ def _read_table(spark: SparkSession, name: str, sf_dir: str) -> DataFrame:
             spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
         except Exception:
             pass
-    df = spark.read.parquet(f"{sf_dir}/{name}.parquet")
-    if name == "events":
+    df = spark.read.parquet(path)
+    if events:
         ts_type = dict(df.dtypes).get("ts")
         if ts_type == "bigint":
             df = df.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))

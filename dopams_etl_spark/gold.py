@@ -14,7 +14,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from dopams_etl_spark.sinks import hadoop_fs_path, publish_parquet, restore_retired
+from dopams_etl_spark.catalog import hadoop_fs_path, open_parquet
+from dopams_etl_spark.sinks import publish_parquet, restore_retired
 
 GOLD_PIPELINES = (
     "firs_mv",
@@ -89,7 +90,10 @@ def _refresh_one(spark: SparkSession, name: str, build, sf_dir: str, path: str) 
 
 
 def load_gold(spark: SparkSession, out_dir: str, name: str) -> DataFrame:
-    return spark.read.parquet(f"{out_dir}/{name}")
+    """The gold table ``name`` under ``out_dir``, opened once per session
+    (``catalog.open_parquet``: a refresh, here or in another process, is
+    seen by the next call)."""
+    return open_parquet(spark, f"{out_dir}/{name}")
 
 
 def get_accused_crime_history(spark: SparkSession, out_dir: str, person_id: int) -> DataFrame:
@@ -158,7 +162,7 @@ def compact_table(
     """
     path = path.rstrip("/")
     restore_retired(spark, path)
-    df = spark.read.parquet(path)
+    df = open_parquet(spark, path)
     rows = df.count()
     before, size_bytes = _parquet_files(spark, path)
     per_row = max(size_bytes / max(rows, 1), 1.0)
@@ -174,13 +178,18 @@ def compact_table(
 
 
 def _parquet_files(spark: SparkSession, path: str) -> tuple[int, int]:
-    """(count, total bytes) of the parquet files under ``path``."""
-    fs, hpath = hadoop_fs_path(spark, path)
-    files = fs.listFiles(hpath, True)
+    """(count, total bytes) of the parquet files under ``path``. Walks
+    ``listStatus``, not ``listFiles``: each ``LocatedFileStatus`` that
+    ``listFiles`` returns loads its file's permission, which on the local
+    file system without Hadoop native IO spawns one ``ls -ld`` per file."""
+    fs, root = hadoop_fs_path(spark, path)
     count = size = 0
-    while files.hasNext():
-        st = files.next()
-        if st.getPath().getName().endswith(".parquet"):
-            count += 1
-            size += st.getLen()
+    dirs = [root]
+    while dirs:
+        for st in fs.listStatus(dirs.pop()):
+            if st.isDirectory():
+                dirs.append(st.getPath())
+            elif st.getPath().getName().endswith(".parquet"):
+                count += 1
+                size += st.getLen()
     return count, size

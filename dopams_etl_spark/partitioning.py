@@ -23,7 +23,7 @@ from pyspark.sql import DataFrame, SparkSession
 # function of the analyzed plan and the files it lists, so memoize it per
 # session on semanticHash: semanticHash needs only analysis, which the
 # caller's own schema accesses have already paid. Keyed WEAKLY by the
-# SparkSession object (like ``catalog._TABLE_CACHE``), so a collected
+# SparkSession object (like ``catalog._OPENED``), so a collected
 # session's entries go with it and its id can't alias a new session's.
 # semanticHash is blind to a path's files (a file index hashes its root
 # paths), so ``catalog.forget_path`` — called by every writer that

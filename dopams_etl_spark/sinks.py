@@ -23,17 +23,11 @@ from collections.abc import Sequence
 
 from pyspark.sql import DataFrame, DataFrameWriter, SparkSession
 
-from dopams_etl_spark.catalog import forget_path
+from dopams_etl_spark.catalog import forget_path, hadoop_fs_path, open_parquet
 from dopams_etl_spark.operators.merge import upsert_latest_wins
 
 
 # -- staged directory swap (Hadoop FS API: local disk, HDFS, s3a alike) ----
-
-
-def hadoop_fs_path(spark: SparkSession, p: str):
-    """(FileSystem, Path) for ``p`` under the session's Hadoop conf."""
-    hpath = spark._jvm.org.apache.hadoop.fs.Path(p)
-    return hpath.getFileSystem(spark._jsc.hadoopConfiguration()), hpath
 
 
 def _retired(path: str) -> str:
@@ -82,7 +76,8 @@ def publish_parquet(spark: SparkSession, writer: DataFrameWriter, path: str) -> 
     ``<path>__staging`` in full, then ``swap_staged`` it over the live table,
     or rename it into place when there is none yet. A failed write leaves
     the previous table (or no table) behind, never an empty directory.
-    Drops the ``load_table`` and partition-probe memos of ``path`` last.
+    Drops the path's open table (``catalog.forget_path``) and the
+    partition-probe memo last.
     Holds no state of its own, so concurrent calls for distinct paths are
     safe (``gold.refresh_gold`` runs one per pool thread)."""
     path = path.rstrip("/")
@@ -117,7 +112,7 @@ class KeyedTableSink:
         return bool(fs.exists(hpath))
 
     def read(self) -> DataFrame:
-        return self.spark.read.parquet(self.path)
+        return open_parquet(self.spark, self.path)
 
     def upsert(self, incoming: DataFrame) -> None:
         """Latest-wins upsert of ``incoming`` into the table (creates it on
@@ -126,7 +121,7 @@ class KeyedTableSink:
         reference's in-chunk duplicate handling (``etl_crimes.py:853–871``).
         The merge reads the files the write replaces, so it is staged and
         swapped in by ``publish_parquet``, which also drops the path's
-        ``catalog.load_table`` memo.
+        open table (``catalog.open_parquet``).
         """
         restore_retired(self.spark, self.path)
         live = self.read() if self.exists() else incoming.limit(0)

@@ -1,8 +1,9 @@
 """``register_views`` reads its tables concurrently; these pin it to the
 serial ``load_table`` path: same views, same schemas, same memo, one job per
 table under the caller's job group, and the serial loop's failure. The
-memo's eviction by ``forget_path`` treats a ``file:`` URI and the local
-path it names as one table."""
+memo is keyed by path: ``forget_path`` treats a ``file:`` URI and the local
+path it names as one table, and a table replaced or deleted behind the
+memo's back is seen on the next read."""
 
 import shutil
 import sys
@@ -10,13 +11,18 @@ import threading
 
 import pytest
 
-from dopams_etl_spark.catalog import TABLES, _TABLE_CACHE, forget_path, load_table, register_views
+from dopams_etl_spark.catalog import TABLES, _OPENED, forget_path, load_table, register_views
 
 SF = "/root/testdata/sf0.001"
 
 
 def _memo(session) -> dict:
-    return dict(_TABLE_CACHE.get(session, {}))
+    """Normalized path -> frame of each table open in ``session``."""
+    return {p: e.frame for p, e in _OPENED.get(session, {}).items() if e.frame is not None}
+
+
+def _paths(sf_dir, tables=TABLES) -> set:
+    return {f"{sf_dir}/{t}.parquet" for t in tables}
 
 
 def test_concurrent_load_table_callers_share_one_frame(spark):
@@ -48,7 +54,7 @@ def test_concurrent_load_table_callers_share_one_frame(spark):
     assert not any(t.is_alive() for t in threads)
     assert all(df is got[0] for df in got)
     memo = _memo(s)
-    assert list(memo) == [(SF, "orders")] and memo[(SF, "orders")] is got[0]
+    assert list(memo) == [f"{SF}/orders.parquet"] and memo[f"{SF}/orders.parquet"] is got[0]
     sc._jsc.sc().listenerBus().waitUntilEmpty()
     assert len(sc.statusTracker().getJobIdsForGroup(group)) == 1
 
@@ -60,7 +66,7 @@ def test_register_views_matches_serial_load_table(spark):
         assert s.catalog.tableExists(t), t
         assert s.table(t).schema == load_table(serial, t, SF).schema, t
     assert dict(s.table("events").dtypes)["ts"] == "timestamp"
-    assert set(_memo(s)) == {(SF, t) for t in TABLES}
+    assert set(_memo(s)) == _paths(SF)
 
 
 def test_register_views_reads_run_under_callers_job_group(spark):
@@ -108,10 +114,10 @@ def test_register_views_on_hadoop_fs_uri(spark):
     register_views(s, uri)
     assert all(s.catalog.tableExists(t) for t in TABLES)
     assert s.table("region").count() == load_table(spark, "region", SF).count()
-    assert set(_memo(s)) == {(uri, t) for t in TABLES}
+    assert set(_memo(s)) == _paths(SF)
 
     forget_path(f"{uri}/orders.parquet")
-    assert set(_memo(s)) == {(uri, t) for t in TABLES if t != "orders"}
+    assert set(_memo(s)) == _paths(SF, [t for t in TABLES if t != "orders"])
 
 
 @pytest.mark.parametrize("read_as_uri", [True, False], ids=["read-uri-write-local", "read-local-write-uri"])
@@ -131,5 +137,50 @@ def test_upsert_evicts_a_memo_read_under_the_other_spelling(spark, tmp_path, rea
     before = orders.count()
     fresh = orders.limit(7).withColumn("o_orderkey", F.col("o_orderkey") + 10_000_000)
     KeyedTableSink(s, f"{write_dir}/orders.parquet", "o_orderkey", "o_orderdate").upsert(fresh)
-    assert (read_dir, "orders") not in _memo(s)
+    assert f"{local}/orders.parquet" not in _memo(s)
     assert load_table(s, "orders", read_dir).count() == before + 7
+
+
+def test_load_table_sees_a_table_replaced_by_another_writer(spark, tmp_path):
+    """Another process's ``swap_staged`` replaces a table without this
+    process's ``forget_path``: the next ``load_table`` reads the new rows,
+    not the deleted files its first open listed."""
+    from dopams_etl_spark.sinks import swap_staged
+
+    s = spark.newSession()
+    path = str(tmp_path / "orders.parquet")
+    orders = load_table(s, "orders", SF)
+    orders.write.parquet(path)
+    assert load_table(s, "orders", str(tmp_path)).count() == orders.count()
+    orders.limit(5).write.parquet(f"{path}__staging")
+    swap_staged(s, f"{path}__staging", path)
+    assert load_table(s, "orders", str(tmp_path)).count() == 5
+
+
+def test_load_table_of_a_deleted_table_raises_like_an_uncached_read(spark, tmp_path):
+    s = spark.newSession()
+    path = str(tmp_path / "orders.parquet")
+    load_table(s, "orders", SF).write.parquet(path)
+    assert load_table(s, "orders", str(tmp_path)).count() > 0
+    shutil.rmtree(path)
+    with pytest.raises(Exception) as uncached:
+        s.read.parquet(path)
+    with pytest.raises(uncached.type) as err:
+        load_table(s, "orders", str(tmp_path))
+    assert err.value.getCondition() == uncached.value.getCondition() == "PATH_NOT_FOUND"
+
+
+def test_one_path_opens_one_frame_whoever_opens_it(spark):
+    """``load_table``, ``open_parquet`` and a sink's ``read`` of one file
+    share its frame; the events file opens with its ``ts`` normalized
+    either way."""
+    from dopams_etl_spark.catalog import open_parquet
+    from dopams_etl_spark.sinks import KeyedTableSink
+
+    s = spark.newSession()
+    events = open_parquet(s, f"file://{SF}/events.parquet")
+    assert dict(events.dtypes)["ts"] == "timestamp"
+    assert load_table(s, "events", SF) is events
+    orders = load_table(s, "orders", SF)
+    assert open_parquet(s, f"{SF}/orders.parquet/") is orders
+    assert KeyedTableSink(s, f"{SF}/orders.parquet", "o_orderkey", "o_orderdate").read() is orders

@@ -862,3 +862,92 @@ def test_compact_table_evicts_the_catalog_memo(spark, tmp_path):
     before = load_table(spark, "orders", wh).count()
     compact_table(spark, f"{wh}/orders.parquet/")
     assert load_table(spark, "orders", wh).count() == before
+
+
+def _jobs_in_group(spark, group: str, run) -> int:
+    """Spark jobs ``run()`` starts under the job group ``group``."""
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        run()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    return len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_repeated_gold_lookups_start_no_table_open_job(spark, tmp_path):
+    """A repeated lookup finds its gold table open: no listing, no
+    footer-read job. The accused history runs its scan and its one-task
+    sort (2 jobs), the person history its scan (1)."""
+    from dopams_etl_spark.gold import get_accused_crime_history, get_person_crime_history, refresh_gold
+
+    out = str(tmp_path / "gold")
+    refresh_gold(spark, SF, out, ("accuseds_mv", "criminal_profiles_mv"))
+    lookups = {
+        "accused": (lambda: get_accused_crime_history(spark, out, 7).collect(), 2),
+        "person": (lambda: get_person_crime_history(spark, out, 7).collect(), 1),
+    }
+    for name, (lookup, jobs) in lookups.items():
+        assert lookup()
+        assert _jobs_in_group(spark, f"repeated-{name}-lookup", lookup) == jobs, name
+
+
+def test_load_gold_sees_a_table_replaced_by_another_writer(spark, tmp_path):
+    """Another process refreshes a gold table (writes it in full, renames
+    it over the live one, deletes the old one) without this process's
+    ``forget_path``: the next ``load_gold`` reads the new rows, not the
+    deleted files its first open listed."""
+    from dopams_etl_spark.gold import load_gold, refresh_gold
+    from dopams_etl_spark.sinks import swap_staged
+
+    out = str(tmp_path / "gold")
+    refresh_gold(spark, SF, out, ("firs_mv",))
+    path = f"{out}/firs_mv"
+    assert load_gold(spark, out, "firs_mv").count() == 1500
+    spark.read.parquet(path).limit(9).write.partitionBy("fir_year").parquet(f"{path}__staging")
+    swap_staged(spark, f"{path}__staging", path)
+    assert load_gold(spark, out, "firs_mv").count() == 9
+
+
+def test_load_gold_of_a_deleted_table_raises_like_an_uncached_read(spark, tmp_path):
+    import shutil
+
+    from dopams_etl_spark.gold import load_gold
+
+    out = str(tmp_path / "gold")
+    spark.range(3).write.parquet(f"{out}/toy_mv")
+    assert load_gold(spark, out, "toy_mv").count() == 3
+    shutil.rmtree(f"{out}/toy_mv")
+    with pytest.raises(Exception) as uncached:
+        spark.read.parquet(f"{out}/toy_mv")
+    with pytest.raises(uncached.type) as err:
+        load_gold(spark, out, "toy_mv")
+    assert err.value.getCondition() == uncached.value.getCondition() == "PATH_NOT_FOUND"
+
+
+def test_load_gold_reads_the_rows_of_the_latest_refresh(spark, tmp_path, monkeypatch):
+    from dopams_etl_spark.gold import load_gold, refresh_gold
+
+    rows = {"n": 4}
+    _registry_with(monkeypatch, {"toy_mv": lambda spark, sf_dir: spark.range(rows["n"])})
+    out = str(tmp_path / "gold")
+    refresh_gold(spark, SF, out, ("toy_mv",))
+    assert load_gold(spark, out, "toy_mv").count() == 4
+    rows["n"] = 11
+    refresh_gold(spark, SF, out, ("toy_mv",))
+    assert load_gold(spark, out, "toy_mv").count() == 11
+
+
+def test_parquet_files_counts_what_os_walk_sees(spark, tmp_path):
+    """``compact_table``'s listing of a partitioned gold table: the same
+    parquet file count and bytes as a walk of the directory tree."""
+    from dopams_etl_spark.gold import _parquet_files, refresh_gold
+
+    out = str(tmp_path / "gold")
+    refresh_gold(spark, SF, out, ("firs_mv",))
+    files = [os.path.join(d, f) for d, _, names in os.walk(f"{out}/firs_mv")
+             for f in names if f.endswith(".parquet")]
+    assert len({os.path.dirname(f) for f in files}) > 1  # partitioned
+    assert _parquet_files(spark, f"{out}/firs_mv") == (len(files), sum(map(os.path.getsize, files)))

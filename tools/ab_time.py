@@ -9,7 +9,9 @@ Usage:
 Per query it prints one JSON line: ``build_s`` (DataFrame construction),
 ``first_s`` (first execution: optimization + codegen + run) and
 ``warm_s`` (min of ``AB_RUNS`` further executions), with
-``first_compiles`` and ``warm_compiles``, the generated classes Spark
+``build_jobs``, the Spark jobs started while the plan was built (a
+partition probe on a join runs its broadcast stage under AQE, for one),
+and ``first_compiles`` and ``warm_compiles``, the generated classes Spark
 compiled during the first run and during all the warm runs (a warm run
 that compiles did not find its generated code in Spark's codegen cache);
 or ``error`` for a query that raises (the sweep goes on). A last line
@@ -51,6 +53,14 @@ def _compiles(spark) -> int:
     return codegen.METRIC_COMPILATION_TIME().getCount()
 
 
+def _last_job_id(spark) -> int:
+    """Id of the latest job in the status store (-1 before the first)."""
+    sc = spark.sparkContext._jsc.sc()
+    sc.listenerBus().waitUntilEmpty()
+    jobs = sc.statusStore().jobsList(None)  # newest first
+    return jobs.apply(0).jobId() if jobs.nonEmpty() else -1
+
+
 def main() -> None:
     from dopams_etl_spark.plans import catalog
     from dopams_etl_spark.session import get_spark
@@ -62,14 +72,16 @@ def main() -> None:
     for name in sys.argv[1:] or list(qs):
         spark.sparkContext.setJobDescription(f"ab_time: {name}")
         try:
+            j0 = _last_job_id(spark)
             t0 = time.perf_counter()
             df = qs[name](spark, SF_DIR)
             build_s = time.perf_counter() - t0
+            build_jobs = _last_job_id(spark) - j0
             c0 = _compiles(spark)
             first_s = _noop_write_s(df)
             c1 = _compiles(spark)
             warm[name] = min(_noop_write_s(df) for _ in range(RUNS))
-            print(json.dumps({"q": name, "build_s": round(build_s, 3),
+            print(json.dumps({"q": name, "build_s": round(build_s, 3), "build_jobs": build_jobs,
                               "first_s": round(first_s, 3),
                               "warm_s": round(warm[name], 3),
                               "first_compiles": c1 - c0,
