@@ -3,10 +3,11 @@
 The engine's SQL entry point is ``spark.sql`` over the registered catalog
 views; this package is the thin planner/validator shell around it —
 keyword intent detection, table matching against the live catalog (read
-through ``SHOW TABLES`` and analyzed schemas, because
-``spark.catalog.listTables/listColumns`` collect through
-``toLocalIterator``, which starts one Spark job per partition on every
-question), limit extraction with defaults/caps, the SELECT-only
+from the session catalog's table list and analyzed schemas, which run no
+Spark query, because ``spark.catalog.listTables/listColumns`` collect
+through ``toLocalIterator``, which starts one Spark job per partition,
+and ``SHOW TABLES`` is a query of its own on every question), limit
+extraction with defaults/caps, the SELECT-only
 safety validator, and the N6 generation slot — ``answer_question`` runs
 the full plan → generate → validate → execute retry loop with a
 deterministic template generator by default and a pluggable LLM

@@ -16,6 +16,7 @@ reference treats its LLM.
 
 from __future__ import annotations
 
+import re
 from collections.abc import Callable
 from dataclasses import dataclass, field
 
@@ -29,9 +30,13 @@ Generator = Callable[[SparkSession, QueryPlan, str], str]
 
 
 def _quote_literal(term: str) -> str:
-    """Single-quote a search term for a LIKE pattern; embedded quotes are
-    doubled so a term can never terminate the string literal."""
-    return term.replace("'", "''").lower()
+    r"""A lowercased search term as the body of a quoted LIKE pattern that
+    matches it as written. Two escape layers, inner first: the LIKE
+    pattern's (``\``, ``%`` and ``_`` behind its escape ``\``), then the
+    Spark string literal's (``\`` and ``'`` behind a backslash), so no
+    term can end the literal or turn into a wildcard."""
+    pattern = re.sub(r"([\\%_])", r"\\\1", term.lower())
+    return re.sub(r"([\\'])", r"\\\1", pattern)
 
 
 def _string_columns(spark: SparkSession, table: str) -> list[str]:
@@ -42,8 +47,8 @@ def _where_clause(spark: SparkSession, table: str, plan: QueryPlan) -> str:
     """Compose the WHERE from the plan's predicates: an OR fan-out of
     lower(col) LIKE '%term%' over the table's string columns (the
     reference's search node) ANDed with any year filter on the table's
-    date column. Identifiers are catalog-sourced; literals are quoted
-    with embedded quotes doubled."""
+    date column. Identifiers are catalog-sourced; literals are escaped
+    by ``_quote_literal``."""
     parts: list[str] = []
     cols = _string_columns(spark, table)
     if cols and plan.search_terms:

@@ -6,11 +6,13 @@ feature extraction (search terms, aggregation/join needs, LIMIT with
 default 100 / cap 10000). Parity with
 ``chatbot/agents/intelligent_query_planner.py:102–340``.
 
-The catalog is read through analysis (``SHOW TABLES``, a table's
-resolved schema), not ``spark.catalog.listTables/listColumns``: in
-PySpark 4 those collect a local Dataset through ``toLocalIterator``,
+The catalog is read without running a Spark query: table names from the
+session catalog (the list ``SHOW TABLES`` builds), column types from a
+table's analyzed schema. Not through ``spark.catalog.listTables/listColumns``:
+in PySpark 4 those collect a local Dataset through ``toLocalIterator``,
 which starts one Spark job per partition (4–5 jobs, 0.1–0.3 s per call),
-while the same names and type strings cost no job at all.
+and not through ``SHOW TABLES`` either, which is a full query (two SQL
+executions, ~10 ms) on every question.
 """
 
 from __future__ import annotations
@@ -44,9 +46,18 @@ TABLE_ALIASES: dict[str, tuple[str, ...]] = {
 
 
 def _table_names(spark: SparkSession) -> list[str]:
-    """Tables and temp views of the current database, as
-    ``spark.catalog.listTables()`` names them, without starting a job."""
-    return [r.tableName for r in spark.sql("SHOW TABLES").collect()]
+    """Tables and local temp views of the current database, as ``SHOW
+    TABLES`` and ``spark.catalog.listTables()`` name them, read live from
+    the session catalog on every call: no SQL execution, no job.
+
+    ``SHOW TABLES`` runs ``SessionCatalog.listTables(currentDb)``; this
+    calls it directly. ``sessionState`` is a developer API, so
+    ``test_catalog_helpers_match_spark_catalog`` pins the result to
+    ``SHOW TABLES``. Only the session catalog (``spark_catalog``) is read:
+    a v2 current catalog is not supported, and the library sets none."""
+    catalog = spark._jsparkSession.sessionState().catalog()
+    ids = catalog.listTables(catalog.getCurrentDatabase())
+    return [ids.apply(i).table() for i in range(ids.size())]
 
 
 def _columns(spark: SparkSession, table: str) -> list[tuple[str, str]]:

@@ -110,7 +110,8 @@ def validate_sql(sql: str) -> ValidationResult:
 def sanitize_error(exc: Exception) -> str:
     """User-safe error text: strip paths, JVM frames, and schema details
     (``query_validator.py`` error sanitizer)."""
-    msg = str(exc).splitlines()[0] if str(exc) else exc.__class__.__name__
+    # a Spark parse error's text starts with a blank line
+    msg = next((ln for ln in str(exc).splitlines() if ln.strip()), exc.__class__.__name__)
     msg = re.sub(r"(/[\w./-]+)+", "<path>", msg)
     msg = re.sub(r"`[^`]+`", "<identifier>", msg)
     return msg[:200]

@@ -75,10 +75,16 @@ def test_executor_caps_rows_and_rejects(spark):
     r3 = execute_guarded(spark, "SELECT nope_col FROM orders")
     assert not r3.ok and "nope_col" not in r3.error  # sanitized
 
+    # a parse error's text opens with a blank line; its reason still comes back
+    r4 = execute_guarded(spark, "SELECT * FROM customer WHERE (c_name LIKE 'x")
+    assert not r4.ok and "PARSE_SYNTAX_ERROR" in r4.error
+
 
 def test_sanitize_error_strips_paths_and_identifiers():
     msg = sanitize_error(Exception("Failure at /opt/spark/x.py: column `secret_col` missing"))
     assert "/opt" not in msg and "secret_col" not in msg
+    msg = sanitize_error(Exception("\n  \n[X] at /srv/app/x.py near `secret_col`\n== SQL =="))
+    assert msg.startswith("[X]") and "/srv" not in msg and "secret_col" not in msg
 
 
 # ---- N6: generation slot + orchestration round-trip ----------------------
@@ -138,16 +144,42 @@ def test_malicious_generator_is_caught_and_retried(spark):
 
 
 def test_injection_term_never_escapes_literal(spark):
-    """A search term carrying a quote cannot terminate the SQL string:
-    either the validator rejects the pattern or the doubled-quote literal
-    executes as a plain (matchless) LIKE."""
+    """A search term carrying a quote, a backslash or a LIKE wildcard
+    cannot terminate the SQL string or widen the match: either the
+    validator rejects the pattern or the escaped literal executes as a
+    plain (matchless) LIKE. And a term matches exactly as written."""
     from dopams_etl_spark.nlq.generator import answer_question
 
-    ans = answer_question(spark, "find customers named 'x'' OR 1=1 --'")
-    if ans.ok:  # quote got doubled; must behave as a literal, match nothing
-        assert ans.result.row_count == 0
-    else:
-        assert "rejected" in (ans.error or "")
+    for q in (
+        "find customers named 'x'' OR 1=1 --'",
+        'Find customers named "Customer#\\"',
+        'find customers named "a\\\'b"',
+        'find customers named "x\\\' OR 1=1 --"',
+        'find customers named "Customer#_%"',
+    ):
+        ans = answer_question(spark, q)
+        if ans.ok:  # escaped; must behave as a literal, match nothing
+            assert ans.result.row_count == 0, (q, ans.sql)
+        else:
+            assert "rejected" in (ans.error or ""), (q, ans.error)
+
+    spark.sql(
+        "CREATE OR REPLACE TEMP VIEW glyphs AS SELECT * FROM VALUES "
+        "('a\\\\b'), ('ab'), ('a%b'), ('axb'), ('a_b'), ('it\\'s') AS t(s)"
+    )
+    try:
+        def found(term):
+            ans = answer_question(spark, f'find glyphs named "{term}"')
+            assert ans.ok, (term, ans.error)
+            return sorted(r["s"] for r in ans.result.rows)
+
+        assert found("a\\b") == ["a\\b"]
+        assert found("a\\") == ["a\\b"]  # a trailing backslash stays one
+        assert found("a%b") == ["a%b"]
+        assert found("a_b") == ["a_b"]
+        assert found("it's") == ["it's"]
+    finally:
+        spark.catalog.dropTempView("glyphs")
 
 
 def test_format_answer_shapes(spark):
@@ -302,30 +334,43 @@ _QUESTION_SHAPES = (
 )
 
 
+def _last_execution_id(spark):
+    """The newest SQL execution id in the status store, -1 if none. The
+    store keeps at most ``spark.sql.ui.retainedExecutions`` and drops the
+    oldest in batches, so its count can fall while executions start; the
+    newest id only grows."""
+    spark.sparkContext._jsc.sc().listenerBus().waitUntilEmpty()
+    store = spark._jsparkSession.sharedState().statusStore()
+    n = store.executionsCount()
+    return store.executionsList(n - 1, 1).apply(0).executionId() if n else -1
+
+
 def _jobs_started(spark, group, fn):
-    """(fn's result, number of Spark jobs fn started), counted under a
-    job group of its own."""
+    """(fn's result, number of Spark jobs fn started, number of SQL
+    executions fn started), jobs counted under a job group of its own."""
     sc = spark.sparkContext
+    e0 = _last_execution_id(spark)
     sc.setJobGroup(group, group)
     try:
         out = fn()
     finally:
         sc.setLocalProperty("spark.jobGroup.id", None)
         sc.setLocalProperty("spark.job.description", None)
-    sc._jsc.sc().listenerBus().waitUntilEmpty()
-    return out, len(sc.statusTracker().getJobIdsForGroup(group))
+    executions = _last_execution_id(spark) - e0
+    return out, len(sc.statusTracker().getJobIdsForGroup(group)), executions
 
 
 def test_planning_and_generation_start_no_spark_job(spark):
     """Reading the catalog to plan a question and write its SQL is
-    analysis only: no question shape starts a Spark job before execution."""
+    analysis only: no question shape starts a Spark job or SQL execution
+    before execution."""
     from dopams_etl_spark.nlq.generator import generate_sql
 
     def plan_and_generate():
         return [generate_sql(spark, plan_query(spark, q), q) for q in _QUESTION_SHAPES]
 
-    sqls, jobs = _jobs_started(spark, "nlq-plan-generate-budget", plan_and_generate)
-    assert jobs == 0
+    sqls, jobs, executions = _jobs_started(spark, "nlq-plan-generate-budget", plan_and_generate)
+    assert jobs == 0 and executions == 0
     assert "year(o_orderdate) = 1996" in sqls[4] and "AVG(o_totalprice)" in sqls[3]
     assert "GROUP BY o_orderstatus" in sqls[2] and sqls[6].endswith("LIMIT 5")
 
@@ -333,17 +378,23 @@ def test_planning_and_generation_start_no_spark_job(spark):
 def test_count_question_job_budget(spark):
     from dopams_etl_spark.nlq.generator import answer_question
 
-    ans, jobs = _jobs_started(
+    ans, jobs, executions = _jobs_started(
         spark, "nlq-answer-budget", lambda: answer_question(spark, "How many orders are there?")
     )
     assert ans.ok and ans.result.rows[0]["n"] == 1500
     assert jobs <= 2
+    assert executions == 1  # the answer query only
 
 
 def test_catalog_helpers_match_spark_catalog(spark):
     """The job-free helpers report exactly what spark.catalog does, for
-    every registered view and for the type strings the planner matches on."""
+    every registered view and for the type strings the planner matches on;
+    the table list is the one SHOW TABLES gives, in another current
+    database, with a mixed-case temp view and past a global temp view."""
     from dopams_etl_spark.nlq.planner import _columns, _table_names
+
+    def show_tables():
+        return sorted(r.tableName for r in spark.sql("SHOW TABLES").collect())
 
     spark.sql(
         "CREATE OR REPLACE TEMP VIEW nlq_parity_types AS SELECT "
@@ -360,5 +411,27 @@ def test_catalog_helpers_match_spark_catalog(spark):
             want = [(c.name, c.dataType) for c in spark.catalog.listColumns(t)]
             assert _columns(spark, t) == want, t
         assert dict(_columns(spark, "nlq_parity_types"))["amount"] == "decimal(12,2)"
+        assert sorted(names) == show_tables()
+
+        spark.sql("CREATE TEMP VIEW NlqParityMixedCase AS SELECT 1 AS x")
+        spark.sql("CREATE GLOBAL TEMP VIEW nlq_parity_global AS SELECT 1 AS x")
+        names = _table_names(spark)
+        assert sorted(names) == show_tables()
+        assert "nlqparitymixedcase" in names and "nlq_parity_global" not in names
+
+        spark.sql("CREATE DATABASE nlq_parity_db")
+        spark.sql("CREATE TABLE nlq_parity_db.held (x INT) USING parquet")
+        spark.sql("USE nlq_parity_db")
+        try:
+            names = _table_names(spark)
+            assert sorted(names) == show_tables()
+            assert "held" in names and "orders" in names  # temp views too
+        finally:
+            spark.sql("USE default")
+        names = _table_names(spark)
+        assert sorted(names) == show_tables() and "held" not in names
     finally:
+        spark.sql("DROP DATABASE IF EXISTS nlq_parity_db CASCADE")
+        spark.catalog.dropGlobalTempView("nlq_parity_global")
+        spark.catalog.dropTempView("NlqParityMixedCase")
         spark.catalog.dropTempView("nlq_parity_types")
