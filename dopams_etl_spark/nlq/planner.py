@@ -72,6 +72,8 @@ class QueryPlan:
     intent: str
     confidence: float
     tables: list[str]
+    # (name, type string) per column of tables[0], read once per question
+    columns: list[tuple[str, str]] = field(default_factory=list)
     search_terms: list[str] = field(default_factory=list)
     needs_aggregation: bool = False
     needs_join: bool = False
@@ -132,12 +134,12 @@ def extract_search_terms(question: str) -> list[str]:
 
 
 def extract_group_column(
-    spark: SparkSession, question: str, table: str
+    question: str, columns: list[tuple[str, str]]
 ) -> str | None:
-    """'per X' / 'by X' / 'for each X' → a column of ``table`` whose
-    name contains X. The candidate is matched against the LIVE catalog
-    column list and the CATALOG's spelling is returned — free question
-    text never reaches SQL as an identifier."""
+    """'per X' / 'by X' / 'for each X' → one of ``columns`` (a table's
+    ``_columns``) whose name contains X. The candidate is matched against
+    the LIVE catalog column list and the CATALOG's spelling is returned —
+    free question text never reaches SQL as an identifier."""
     m = re.search(
         r"\b(?:per|by|for each)\s+([a-z_ ]+?)"
         r"(?:\s+(?:in|from|of|with|on)\b|[?.!,]|$)",
@@ -148,7 +150,7 @@ def extract_group_column(
     want = m.group(1).strip().replace(" ", "")
     if not want:
         return None
-    cols = [name for name, _ in _columns(spark, table)]
+    cols = [name for name, _ in columns]
     for c in cols:  # exact name first
         if c.lower() == want:
             return c
@@ -165,10 +167,10 @@ _AGG_WORDS = {"average": "AVG", "avg": "AVG", "mean": "AVG",
 
 
 def extract_measure(
-    spark: SparkSession, question: str, table: str
+    question: str, columns: list[tuple[str, str]]
 ) -> tuple[str, str] | None:
-    """'average X' / 'total X' / 'max X' → (AGG, numeric column of
-    ``table`` whose name contains X). Catalog-matched like
+    """'average X' / 'total X' / 'max X' → (AGG, numeric one of
+    ``columns`` whose name contains X). Catalog-matched like
     ``extract_group_column`` — the returned identifier is the catalog's
     spelling, and only numeric columns qualify (an AVG over a string
     column is never synthesized)."""
@@ -182,11 +184,7 @@ def extract_measure(
     agg = _AGG_WORDS[m.group(1)]
     words = [w.replace(" ", "") for w in
              (m.group(2).strip(), *m.group(2).strip().split()[::-1]) if w]
-    cols = [
-        name
-        for name, dtype in _columns(spark, table)
-        if dtype.startswith(_NUMERIC_TYPES)
-    ]
+    cols = [name for name, dtype in columns if dtype.startswith(_NUMERIC_TYPES)]
     for want in words:  # full phrase first, then each word, rightmost first
         for c in cols:
             if c.lower() == want:
@@ -198,11 +196,11 @@ def extract_measure(
 
 
 def extract_year_filter(
-    spark: SparkSession, question: str, table: str
+    question: str, columns: list[tuple[str, str]]
 ) -> tuple[str, int, str] | None:
     """A 19xx/20xx year WITH a temporal cue ("in 1995", "during 2016",
     "since/before/after/from/until/of <year>", or "<year> orders") + a
-    date/timestamp column on the table → (column, year, operator). The
+    date/timestamp column among ``columns`` → (column, year, operator). The
     cue requirement keeps 4-digit identifier lookups ("find order
     2016") as plain search terms instead of silently becoming
     ``year(o_orderdate)=2016``, and COMPARATIVE cues carry their
@@ -232,7 +230,7 @@ def extract_year_filter(
         "till": "<=",
         "through": "<=",
     }.get(cue, "=")
-    for name, dtype in _columns(spark, table):
+    for name, dtype in columns:
         if dtype in ("date", "timestamp", "timestamp_ntz"):
             return name, year, op
     return None
@@ -242,13 +240,10 @@ def plan_query(spark: SparkSession, question: str) -> QueryPlan:
     intent, conf = detect_intent(question)
     q = question.lower()
     tables = match_tables(spark, question)
-    group_column = (
-        extract_group_column(spark, question, tables[0]) if tables else None
-    )
-    measure = extract_measure(spark, q, tables[0]) if tables else None
-    year_filter = (
-        extract_year_filter(spark, question, tables[0]) if tables else None
-    )
+    # the first matched table's schema, analyzed once for every extractor
+    # and the generator
+    columns = _columns(spark, tables[0]) if tables else []
+    year_filter = extract_year_filter(question, columns)
     terms = extract_search_terms(question)
     if year_filter:
         # a year consumed as a date filter is not ALSO a LIKE search term
@@ -257,12 +252,13 @@ def plan_query(spark: SparkSession, question: str) -> QueryPlan:
         intent=intent,
         confidence=conf,
         tables=tables,
+        columns=columns,
         search_terms=terms,
         needs_aggregation=intent == "count_aggregate"
         or any(w in q for w in ("per ", "group", "average", "sum")),
         needs_join=len(tables) > 1,
         limit=extract_limit(question),
-        group_column=group_column,
-        measure=measure,
+        group_column=extract_group_column(question, columns),
+        measure=extract_measure(q, columns),
         year_filter=year_filter,
     )

@@ -11,7 +11,7 @@ just the fixture.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from dopams_etl_spark.functions.cleaning import (
@@ -722,33 +722,39 @@ def criminal_profiles_mv(spark: SparkSession, sf_dir: str) -> DataFrame:
     decorrelation + W1 DISTINCT ON + A3/A4/A8; shape of
     ``/root/reference/criminal_profiles_mv.sql:1–129``): one profile row
     per person with latest-crime pick, exact distinct counts, filtered max,
-    distinct collect — all from ONE groupBy over the person-crime fact plus
-    one window pass, joined to the person dim."""
-    from dopams_etl_spark.operators.joins import latest_per_key, semi_join
-
+    distinct collect and the latest-crime pick — all from ONE groupBy over
+    the person-crime fact, inner-joined to the person dim (the EXISTS gate:
+    a person without a crime has no group). The pick, ``row_number`` over
+    ``o_orderdate DESC NULLS LAST, o_orderkey ASC`` in the oracle, is
+    ``max(struct(o_orderdate IS NOT NULL, o_orderdate, ~o_orderkey))``:
+    ``o_orderkey`` is never NULL past the join, and ``~k`` cannot overflow."""
     li = t(spark, sf_dir, "lineitem")
     o = t(spark, sf_dir, "orders")
     part = t(spark, sf_dir, "part")
-    # r15 (guide §2): the person-crime fact would otherwise inherit the
-    # one-row-group lineitem scan's single task through the broadcast
-    # join, serializing the partial aggregation / window / semi-join
-    # pipeline. Hash-repartitioning on the person key pre-satisfies the
-    # groupBy AND the latest-per-key window (both keyed l_partkey), so
-    # no further exchange on that key; aggregates are order-safe
-    # (countDistinct, min/max, sorted collect_set, integer-cents sum)
-    # ⇒ bit-identical. No-op at real scan parallelism.
+    # r15 (guide §2): a one-row-group lineitem scans as ONE task, which the
+    # broadcast orders join would hand on to the aggregation. The spread
+    # sits on the scan, before that join, keyed on the person: the join
+    # keeps its stream side's partitioning, so the groupBy (and its
+    # countDistinct) find l_partkey already clustered and add no exchange,
+    # and the probe plans a scan, not a join (no broadcast job at build).
+    # Aggregates are order-safe (countDistinct, min/max, sorted
+    # collect_set, integer-cents sum) ⇒ bit-identical. No-op at real scan
+    # parallelism.
     from dopams_etl_spark.partitioning import ensure_parallelism
 
-    pc = ensure_parallelism(
-        li.join(o, li.l_orderkey == o.o_orderkey).select(
-            "l_partkey", "l_orderkey", "l_returnflag", "l_quantity", "o_orderdate", "o_orderkey"
-        ),
-        "l_partkey",
-    )
+    li = ensure_parallelism(li, "l_partkey")
+    pc = li.join(o, li.l_orderkey == o.o_orderkey)
     stats = pc.groupBy("l_partkey").agg(
         F.countDistinct("l_orderkey").alias("crime_count"),
         # dates as strings (r14 nullhalf census) — see the oracle note
         F.min("o_orderdate").cast("date").cast("string").alias("first_crime_date"),
+        F.max(
+            F.struct(
+                F.col("o_orderdate").isNotNull().alias("dated"),
+                F.col("o_orderdate").alias("d"),
+                F.bitwise_not("o_orderkey").alias("nk"),
+            )
+        ).alias("_latest"),
         F.max(F.when(F.col("l_returnflag") == "R", F.col("o_orderdate")))
         .cast("date")
         .cast("string")
@@ -758,30 +764,20 @@ def criminal_profiles_mv(spark: SparkSession, sf_dir: str) -> DataFrame:
         ),
         F.sum(money_cents("l_quantity")).alias("_tq_cents"),
     )
-    latest = latest_per_key(pc, "l_partkey", "o_orderdate", tiebreak="o_orderkey").select(
-        "l_partkey",
-        F.col("o_orderkey").alias("latest_crime_id"),
-        F.col("o_orderdate").cast("date").cast("string").alias("latest_crime_date"),
-    )
-    persons = semi_join(part, pc.select(F.col("l_partkey").alias("p_partkey")), "p_partkey")
-    return (
-        persons.join(stats, persons.p_partkey == stats.l_partkey).drop("l_partkey")
-        .join(latest, F.col("p_partkey") == latest.l_partkey).drop("l_partkey")
-        .select(
-            F.col("p_partkey").alias("person_id"),
-            F.col("p_name").alias("person_name"),
-            "crime_count",
-            "first_crime_date",
-            "latest_crime_id",
-            "latest_crime_date",
-            "last_arrest_date",
-            "crime_flags",
-            # COALESCE '0.00' mirrors the oracle (r14 review): a part
-            # whose every lineitem quantity is NULL sums to NULL cents
-            F.coalesce(cents_to_money_string("_tq_cents"), F.lit("0.00")).alias(
-                "total_qty"
-            ),
-        )
+    return part.join(stats, part.p_partkey == stats.l_partkey).select(
+        F.col("p_partkey").alias("person_id"),
+        F.col("p_name").alias("person_name"),
+        "crime_count",
+        "first_crime_date",
+        F.bitwise_not("_latest.nk").alias("latest_crime_id"),
+        F.col("_latest.d").cast("date").cast("string").alias("latest_crime_date"),
+        "last_arrest_date",
+        "crime_flags",
+        # COALESCE '0.00' mirrors the oracle (r14 review): a part
+        # whose every lineitem quantity is NULL sums to NULL cents
+        F.coalesce(cents_to_money_string("_tq_cents"), F.lit("0.00")).alias(
+            "total_qty"
+        ),
     )
 
 
@@ -1221,7 +1217,6 @@ def entity_resolution_blocked(spark: SparkSession, sf_dir: str) -> DataFrame:
     # uniqueness. A roster with duplicate canonicals must dedupe or
     # re-key before entering this rewrite (pinned in
     # tests/test_resolution.py::test_er_cand_canonical_ids_unique).
-    from pyspark.sql import Window
 
     def _tkey(cols: list[str]):
         return F.md5(
@@ -1803,19 +1798,19 @@ def advanced_search_accuseds(spark: SparkSession, sf_dir: str) -> DataFrame:
     (sql:123–140). AI fields are synthesized deterministically from lineitem
     keys (fixture), identically in the oracle.
 
-    Scale shape: the two drug child aggregates and the accused→crime spine
-    all shuffle on the same key (the crime id), so at 100 TB the exchanges
-    colocate; the fixed-size nation dim is broadcast, SF-scaling dims are
-    left to AQE; no row explosion — output grain stays one row per accused.
+    Scale shape: ONE pass over lineitem — both per-crime drug fields are
+    window aggregates over the accused rows, partitioned by the crime id the
+    one shuffle already uses; the fixed-size nation dim is broadcast,
+    SF-scaling dims are left to AQE; output grain: one row per accused.
     """
     li = t(spark, sf_dir, "lineitem")
     # r15 (guide §2): a single-row-group parquet scans as ONE task, and
     # every join here is broadcast, so the whole 600 k-row wide
-    # string-building pipeline would run at scan parallelism. Hash-
-    # repartitioning the spine ON THE CRIME KEY both spreads the compute
-    # and pre-satisfies the two child aggregates and the accused→crime
-    # joins (same key ⇒ the groupBy exchanges collapse into this one).
-    # No-op whenever the scan is already default-parallel (real scale).
+    # string-building pipeline would run at scan parallelism. The spread
+    # sits on the scan, keyed ON THE CRIME KEY: it spreads the compute,
+    # and it is the partitioning the crime-keyed window below needs, so
+    # that window adds a sort but no exchange of its own. No-op whenever
+    # the scan is already default-parallel (real scale).
     from dopams_etl_spark.partitioning import ensure_parallelism
 
     li = ensure_parallelism(li, "l_orderkey")
@@ -1850,30 +1845,6 @@ def advanced_search_accuseds(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.coalesce(dname, F.lit("null")), F.lit("="), qty_label, F.lit("@"),
         worth.cast("string"),
     )
-    # Materialize dname/entry as concrete attributes so Catalyst doesn't
-    # re-inline the CASE cascade into every downstream reference.
-    flat = li.select(
-        "l_orderkey", "l_linenumber", "l_partkey",
-        dname.alias("dname"), entry.alias("entry"),
-    )
-    details = flat.groupBy("l_orderkey").agg(
-        F.array_join(
-            F.transform(
-                collect_sorted_structs(
-                    ["l_linenumber", "l_partkey", "entry"], {"e": F.col("entry")}
-                ),
-                lambda s: s["e"],
-            ),
-            ";",
-        ).alias("drug_details")
-    )
-    dn = F.upper(F.trim("dname"))
-    types = (
-        flat.filter(F.col("dname").isNotNull() & (dn != "NO_DRUGS_DETECTED"))
-        .groupBy("l_orderkey")
-        .agg(F.array_join(F.array_sort(F.collect_set(dn)), ",").alias("drug_type"))
-    )
-
     status_raw = F.coalesce(
         F.when(ln % 3 == 0, F.lit(None))
         .when(F.col("l_linestatus") == "O", "Arrest Related/41A CrPC Pending")
@@ -1890,19 +1861,41 @@ def advanced_search_accuseds(spark: SparkSession, sf_dir: str) -> DataFrame:
         .when(F.col("l_returnflag") == "A", "Suspect")
         .otherwise("Witness"),
     )
-    acc = li.select(
+    # Materialize dname/entry as concrete attributes so Catalyst doesn't
+    # re-inline the CASE cascade into every downstream reference.
+    flat = li.select(
         "l_orderkey", "l_linenumber", "l_partkey",
+        dname.alias("dname"), entry.alias("entry"),
         status_raw.alias("s"), role.alias("role"),
+    )
+    # The per-crime drug fields over every accused row of the crime (never
+    # NULL: the row itself is in its window): details in (l_linenumber,
+    # l_partkey, entry) order; the distinct detected drug names, sorted.
+    crime = Window.partitionBy("l_orderkey")
+    dn = F.upper(F.trim("dname"))
+    keep = F.col("dname").isNotNull() & (dn != "NO_DRUGS_DETECTED")
+    acc = flat.select(
+        "l_orderkey", "l_linenumber", "l_partkey", "s", "role",
+        F.array_join(
+            F.transform(
+                F.array_sort(
+                    F.collect_list(F.struct("l_linenumber", "l_partkey", "entry")).over(crime)
+                ),
+                lambda e: e["entry"],
+            ),
+            ";",
+        ).alias("drug_details"),
+        F.array_join(F.array_sort(F.collect_set(F.when(keep, dn)).over(crime)), ",").alias(
+            "drug_type"
+        ),
     )
 
     is_comm = F.col("o_orderkey") % 4 == 0
     d = days_since("o_orderdate", F.lit("2026-01-01").cast("date"))
-    # All three orderkey-keyed joins share one shuffle partitioning; only
-    # fixed-size nation carries a broadcast hint (cust/part scale with SF).
+    # Only fixed-size nation carries a broadcast hint (orders/cust/part
+    # scale with SF).
     j = (
-        acc.join(details, "l_orderkey", "left")
-        .join(types, "l_orderkey", "left")
-        .join(o, acc.l_orderkey == o.o_orderkey)
+        acc.join(o, acc.l_orderkey == o.o_orderkey)
         .join(cust, o.o_custkey == cust.c_custkey)
         .join(F.broadcast(nat), cust.c_nationkey == nat.n_nationkey)
         .join(part, acc.l_partkey == part.p_partkey, "left")
@@ -1929,8 +1922,8 @@ def advanced_search_accuseds(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.nullif(F.trim("p_type"), F.lit("")),
             F.nullif(F.trim("n_name"), F.lit("")),
         ).alias("present_address"),
-        F.coalesce("drug_type", F.lit("")).alias("drug_type"),
-        F.coalesce("drug_details", F.lit("")).alias("drug_details"),
+        "drug_type",
+        "drug_details",
         F.when(is_comm, "Commercial").otherwise("Small").alias("case_class"),
         F.when(is_comm, due_date("o_orderdate", 180))
         .otherwise(due_date("o_orderdate", 60))

@@ -208,12 +208,13 @@ def test_group_by_synthesis(spark):
     question text."""
     from dopams_etl_spark.catalog import register_views
     from dopams_etl_spark.nlq.generator import answer_question
-    from dopams_etl_spark.nlq.planner import extract_group_column
+    from dopams_etl_spark.nlq.planner import _columns, extract_group_column
 
     register_views(spark, "/root/testdata/sf0.001")
-    assert extract_group_column(spark, "how many orders per priority?", "orders") == "o_orderpriority"
-    assert extract_group_column(spark, "count events by event type", "events") == "event_type"
-    assert extract_group_column(spark, "how many orders per dragon?", "orders") is None
+    orders, events = _columns(spark, "orders"), _columns(spark, "events")
+    assert extract_group_column("how many orders per priority?", orders) == "o_orderpriority"
+    assert extract_group_column("count events by event type", events) == "event_type"
+    assert extract_group_column("how many orders per dragon?", orders) is None
 
     ans = answer_question(spark, "How many orders per priority?")
     assert ans.ok, ans.error
@@ -234,14 +235,18 @@ def test_measure_aggregate_synthesis(spark):
     the count path."""
     from dopams_etl_spark.catalog import register_views
     from dopams_etl_spark.nlq.generator import answer_question
-    from dopams_etl_spark.nlq.planner import extract_measure
+    from dopams_etl_spark.nlq.planner import _columns, extract_measure
 
     register_views(spark, "/root/testdata/sf0.001")
-    assert extract_measure(spark, "average order price", "orders") == ("AVG", "o_totalprice")
-    assert extract_measure(spark, "total quantity", "lineitem") == ("SUM", "l_quantity")
-    assert extract_measure(spark, "maximum value", "events") == ("MAX", "value")
+
+    def measure(question, table):
+        return extract_measure(question, _columns(spark, table))
+
+    assert measure("average order price", "orders") == ("AVG", "o_totalprice")
+    assert measure("total quantity", "lineitem") == ("SUM", "l_quantity")
+    assert measure("maximum value", "events") == ("MAX", "value")
     # string columns never qualify as measures
-    assert extract_measure(spark, "average name", "customer") is None
+    assert measure("average name", "customer") is None
 
     ans = answer_question(spark, "What is the average order price per priority?")
     assert ans.ok, ans.error
@@ -373,6 +378,26 @@ def test_planning_and_generation_start_no_spark_job(spark):
     assert jobs == 0 and executions == 0
     assert "year(o_orderdate) = 1996" in sqls[4] and "AVG(o_totalprice)" in sqls[3]
     assert "GROUP BY o_orderstatus" in sqls[2] and sqls[6].endswith("LIMIT 5")
+
+
+def test_one_schema_read_per_question(spark, monkeypatch):
+    """Planning a question and writing its SQL analyzes the matched
+    table's schema once: every extractor and the generator read the
+    column list the plan carries."""
+    from dopams_etl_spark.nlq import generator, planner
+
+    calls = []
+
+    def counting(spark_, table, _real=planner._columns):
+        calls.append(table)
+        return _real(spark_, table)
+
+    monkeypatch.setattr(planner, "_columns", counting)
+    monkeypatch.setattr(generator, "_columns", counting, raising=False)
+    for q in _QUESTION_SHAPES:
+        calls.clear()
+        generator.generate_sql(spark, plan_query(spark, q), q)
+        assert len(calls) == 1, (q, calls)
 
 
 def test_count_question_job_budget(spark):

@@ -222,6 +222,26 @@ def _scala_keys(m) -> set[int]:
     return out
 
 
+@pytest.mark.parametrize("name", ("firs_mv", "accuseds_mv", "criminal_profiles_mv",
+                                  "advanced_search_firs", "advanced_search_accuseds"))
+def test_gold_mv_build_after_a_publish_starts_no_job(spark, name):
+    """Every publish's ``forget_path`` clears the partition-probe memo, so
+    each ``refresh_gold`` builds its MVs against a cold memo. With every
+    table open, that build only plans: a spread probed on a join would
+    run the join's broadcast stage as a Spark job."""
+    from dopams_etl_spark import partitioning
+    from dopams_etl_spark.catalog import register_views
+    from dopams_etl_spark.plans.catalog import queries
+    from tools.ab_time import _last_job_id
+
+    register_views(spark, SF)
+    build = queries()[name]
+    partitioning._NPART_CACHE.clear()
+    before = _last_job_id(spark)
+    build(spark, SF)
+    assert _last_job_id(spark) == before
+
+
 def test_gold_refresh_keeps_job_group_across_threads(spark, tmp_path):
     """The MV writes run on pool threads, yet every job the refresh starts
     carries the caller's job group and tags, and each MV's write shows up
